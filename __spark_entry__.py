@@ -5,166 +5,36 @@ layer) plus the training-data pipeline operators (dedup / similarity /
 text analysis) over the driver's sf tables, and the flagship extraction
 pipeline over a deterministic self-generated interleaved corpus whose
 golden outputs serve as the DuckDB oracle (read by absolute parquet path).
+
+The registry is discovered, not listed: every module under
+``ocr_to_csv_spark/functions/`` that defines ``QUERIES`` and ``ORACLES``
+contributes both dicts, next to the flagship queries defined here.
 """
 
 from __future__ import annotations
 
+import importlib
 import os
+import pkgutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocr_to_csv_spark.functions import (
-    analytics,
-    analytics2,
-    curation,
-    dataops,
-    dataops2,
-    curation4,
-    curation5,
-    composed,
-    curation6,
-    curation7,
-    curation8,
-    dagops,
-    dedup,
-    graphcut,
-    graphtext,
-    irops,
-    textmetrics,
-    tpch,
-    tpch3,
-    tpch4,
-    tpch5,
-    engagement,
-    gameops,
-    statsops,
-    temporal,
-    temporal2,
-    linkpred,
-    graphstats,
-    graphstats2,
-    basketops,
-    evalops,
-    erops,
-    erops2,
-    netops,
-    rankstats,
-    calendarops,
-    causalops,
-    clusterops,
-    experimentops,
-    experimentops2,
-    fitops,
-    fitops2,
-    scanops,
-    sampleops,
-    scanops2,
-    seqops,
-    matchops,
-    misops,
-    mlops,
-    mlops2,
-    mstops,
-    privops,
-    privops2,
-    genevalops,
-    graphsim,
-    spectrops,
-    hurstops,
-    flowops,
-    rakeops,
-    brierops,
-    hmmops,
-    streamsketch,
-    bwtops,
-    rankstats2,
-    geomops,
-    voteops,
-    boostops,
-    colorops,
-    collocops,
-    styloops,
-    hwops,
-    rakingops,
-    filterops,
-    panelops,
-    infoops,
-    transportops,
-    conformops,
-    succinctops,
-    codingops,
-    banditops,
-    stopops,
-    morrisops,
-    tourops,
-    crdtops,
-    quorumops,
-    zarrops,
-    sortnetops,
-    lzops,
-    csketchops,
-    stratops,
-    driftops,
-    suffixops,
-    sqlsurface,
-    tableops,
-    vocabops,
-    hullops,
-    crawlops,
-    segmentops,
-    brandesops,
-    compressops,
-    spellops,
-    planops,
-    waveops,
-    lmops,
-    graphsweep,
-    ccoeffops,
-    dedupeval,
-    peakops,
-    bitempops,
-    webgraph,
-    synthops,
-    motifops,
-    anfops,
-    evalops2,
-    joinorderops,
-    eigops,
-    noiseops,
-    histops,
-    opsaudit,
-    chainops,
-    cascadeops,
-    schedops,
-    sketchest,
-    htmlops,
-    walkops,
-    corpusstats,
-    tsevalops,
-    recops,
-    diffops,
-    governops,
-    attribution,
-    attribution2,
-    codecs,
-    relational,
-    similarity,
-    geoops,
-    geoops2,
-    hierops,
-    projops,
-    sketchops,
-    statsops2,
-    statsops3,
-    statsops4,
-    statsops5,
-    survival,
-    sweepops,
-    textops,
-    windowdistinct,
-)
+from ocr_to_csv_spark import functions as _functions
+from ocr_to_csv_spark.functions import textops
+
+# The query library: every module under functions/ that defines QUERIES
+# (and ORACLES). Imported with this module, never earlier: some modules
+# read environment variables at import time.
+_LIBRARY = [
+    m
+    for m in (
+        importlib.import_module(f"{_functions.__name__}.{info.name}")
+        for info in pkgutil.iter_modules(_functions.__path__)
+    )
+    if hasattr(m, "QUERIES")
+]
 
 CORPUS_DOCS = 40
 CORPUS_SEED = 42
@@ -1022,155 +892,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    out.update(relational.QUERIES)
-    out.update(textops.QUERIES)
-    out.update(dedup.QUERIES)
-    out.update(similarity.QUERIES)
-    out.update(curation.QUERIES)
-    out.update(curation4.QUERIES)
-    out.update(curation5.QUERIES)
-    out.update(curation6.QUERIES)
-    out.update(curation7.QUERIES)
-    out.update(analytics.QUERIES)
-    out.update(analytics2.QUERIES)
-    out.update(dataops.QUERIES)
-    out.update(dataops2.QUERIES)
-    out.update(graphtext.QUERIES)
-    out.update(irops.QUERIES)
-    out.update(tpch.QUERIES)
-    out.update(tpch3.QUERIES)
-    out.update(tpch4.QUERIES)
-    out.update(tpch5.QUERIES)
-    out.update(engagement.QUERIES)
-    out.update(statsops.QUERIES)
-    out.update(temporal.QUERIES)
-    out.update(temporal2.QUERIES)
-    out.update(linkpred.QUERIES)
-    out.update(graphstats.QUERIES)
-    out.update(graphstats2.QUERIES)
-    out.update(basketops.QUERIES)
-    out.update(evalops.QUERIES)
-    out.update(erops.QUERIES)
-    out.update(erops2.QUERIES)
-    out.update(netops.QUERIES)
-    out.update(rankstats.QUERIES)
-    out.update(calendarops.QUERIES)
-    out.update(sqlsurface.QUERIES)
-    out.update(attribution.QUERIES)
-    out.update(attribution2.QUERIES)
-    out.update(codecs.QUERIES)
-    out.update(textmetrics.QUERIES)
-    out.update(composed.QUERIES)
-    out.update(sketchops.QUERIES)
-    out.update(curation8.QUERIES)
-    out.update(statsops2.QUERIES)
-    out.update(statsops3.QUERIES)
-    out.update(statsops4.QUERIES)
-    out.update(statsops5.QUERIES)
-    out.update(projops.QUERIES)
-    out.update(geoops.QUERIES)
-    out.update(geoops2.QUERIES)
-    out.update(sweepops.QUERIES)
-    out.update(hierops.QUERIES)
-    out.update(windowdistinct.QUERIES)
-    out.update(dagops.QUERIES)
-    out.update(survival.QUERIES)
-    out.update(gameops.QUERIES)
-    out.update(matchops.QUERIES)
-    out.update(clusterops.QUERIES)
-    out.update(fitops.QUERIES)
-    out.update(fitops2.QUERIES)
-    out.update(scanops.QUERIES)
-    out.update(scanops2.QUERIES)
-    out.update(sampleops.QUERIES)
-    out.update(seqops.QUERIES)
-    out.update(tableops.QUERIES)
-    out.update(graphcut.QUERIES)
-    out.update(vocabops.QUERIES)
-    out.update(hullops.QUERIES)
-    out.update(crawlops.QUERIES)
-    out.update(segmentops.QUERIES)
-    out.update(brandesops.QUERIES)
-    out.update(compressops.QUERIES)
-    out.update(spellops.QUERIES)
-    out.update(planops.QUERIES)
-    out.update(waveops.QUERIES)
-    out.update(lmops.QUERIES)
-    out.update(graphsweep.QUERIES)
-    out.update(ccoeffops.QUERIES)
-    out.update(dedupeval.QUERIES)
-    out.update(peakops.QUERIES)
-    out.update(bitempops.QUERIES)
-    out.update(webgraph.QUERIES)
-    out.update(synthops.QUERIES)
-    out.update(motifops.QUERIES)
-    out.update(anfops.QUERIES)
-    out.update(evalops2.QUERIES)
-    out.update(joinorderops.QUERIES)
-    out.update(eigops.QUERIES)
-    out.update(noiseops.QUERIES)
-    out.update(histops.QUERIES)
-    out.update(opsaudit.QUERIES)
-    out.update(chainops.QUERIES)
-    out.update(cascadeops.QUERIES)
-    out.update(schedops.QUERIES)
-    out.update(sketchest.QUERIES)
-    out.update(htmlops.QUERIES)
-    out.update(walkops.QUERIES)
-    out.update(corpusstats.QUERIES)
-    out.update(tsevalops.QUERIES)
-    out.update(recops.QUERIES)
-    out.update(diffops.QUERIES)
-    out.update(governops.QUERIES)
-    out.update(misops.QUERIES)
-    out.update(experimentops.QUERIES)
-    out.update(experimentops2.QUERIES)
-    out.update(causalops.QUERIES)
-    out.update(mlops.QUERIES)
-    out.update(mlops2.QUERIES)
-    out.update(mstops.QUERIES)
-    out.update(privops.QUERIES)
-    out.update(privops2.QUERIES)
-    out.update(suffixops.QUERIES)
-    out.update(genevalops.QUERIES)
-    out.update(graphsim.QUERIES)
-    out.update(spectrops.QUERIES)
-    out.update(hurstops.QUERIES)
-    out.update(flowops.QUERIES)
-    out.update(rakeops.QUERIES)
-    out.update(brierops.QUERIES)
-    out.update(hmmops.QUERIES)
-    out.update(streamsketch.QUERIES)
-    out.update(bwtops.QUERIES)
-    out.update(rankstats2.QUERIES)
-    out.update(geomops.QUERIES)
-    out.update(voteops.QUERIES)
-    out.update(boostops.QUERIES)
-    out.update(colorops.QUERIES)
-    out.update(collocops.QUERIES)
-    out.update(styloops.QUERIES)
-    out.update(hwops.QUERIES)
-    out.update(rakingops.QUERIES)
-    out.update(filterops.QUERIES)
-    out.update(panelops.QUERIES)
-    out.update(infoops.QUERIES)
-    out.update(transportops.QUERIES)
-    out.update(conformops.QUERIES)
-    out.update(succinctops.QUERIES)
-    out.update(codingops.QUERIES)
-    out.update(banditops.QUERIES)
-    out.update(stopops.QUERIES)
-    out.update(morrisops.QUERIES)
-    out.update(tourops.QUERIES)
-    out.update(crdtops.QUERIES)
-    out.update(quorumops.QUERIES)
-    out.update(zarrops.QUERIES)
-    out.update(sortnetops.QUERIES)
-    out.update(lzops.QUERIES)
-    out.update(csketchops.QUERIES)
-    out.update(stratops.QUERIES)
-    out.update(driftops.QUERIES)
+    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+        name: fn for m in _LIBRARY for name, fn in m.QUERIES.items()
+    }
     out.update(
         {
             "extract_spans": q_extract_spans,
@@ -1199,155 +923,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    out: dict[str, str] = {}
-    out.update(relational.ORACLES)
-    out.update(textops.ORACLES)
-    out.update(dedup.ORACLES)
-    out.update(similarity.ORACLES)
-    out.update(curation.ORACLES)
-    out.update(curation4.ORACLES)
-    out.update(curation5.ORACLES)
-    out.update(curation6.ORACLES)
-    out.update(curation7.ORACLES)
-    out.update(analytics.ORACLES)
-    out.update(analytics2.ORACLES)
-    out.update(dataops.ORACLES)
-    out.update(dataops2.ORACLES)
-    out.update(graphtext.ORACLES)
-    out.update(irops.ORACLES)
-    out.update(tpch.ORACLES)
-    out.update(tpch3.ORACLES)
-    out.update(tpch4.ORACLES)
-    out.update(tpch5.ORACLES)
-    out.update(engagement.ORACLES)
-    out.update(statsops.ORACLES)
-    out.update(temporal.ORACLES)
-    out.update(temporal2.ORACLES)
-    out.update(linkpred.ORACLES)
-    out.update(graphstats.ORACLES)
-    out.update(graphstats2.ORACLES)
-    out.update(basketops.ORACLES)
-    out.update(evalops.ORACLES)
-    out.update(erops.ORACLES)
-    out.update(erops2.ORACLES)
-    out.update(netops.ORACLES)
-    out.update(rankstats.ORACLES)
-    out.update(calendarops.ORACLES)
-    out.update(sqlsurface.ORACLES)
-    out.update(attribution.ORACLES)
-    out.update(attribution2.ORACLES)
-    out.update(codecs.ORACLES)
-    out.update(textmetrics.ORACLES)
-    out.update(composed.ORACLES)
-    out.update(sketchops.ORACLES)
-    out.update(curation8.ORACLES)
-    out.update(statsops2.ORACLES)
-    out.update(statsops3.ORACLES)
-    out.update(statsops4.ORACLES)
-    out.update(statsops5.ORACLES)
-    out.update(projops.ORACLES)
-    out.update(geoops.ORACLES)
-    out.update(geoops2.ORACLES)
-    out.update(sweepops.ORACLES)
-    out.update(hierops.ORACLES)
-    out.update(windowdistinct.ORACLES)
-    out.update(dagops.ORACLES)
-    out.update(survival.ORACLES)
-    out.update(gameops.ORACLES)
-    out.update(matchops.ORACLES)
-    out.update(clusterops.ORACLES)
-    out.update(fitops.ORACLES)
-    out.update(fitops2.ORACLES)
-    out.update(scanops.ORACLES)
-    out.update(scanops2.ORACLES)
-    out.update(sampleops.ORACLES)
-    out.update(seqops.ORACLES)
-    out.update(tableops.ORACLES)
-    out.update(graphcut.ORACLES)
-    out.update(vocabops.ORACLES)
-    out.update(hullops.ORACLES)
-    out.update(crawlops.ORACLES)
-    out.update(segmentops.ORACLES)
-    out.update(brandesops.ORACLES)
-    out.update(compressops.ORACLES)
-    out.update(spellops.ORACLES)
-    out.update(planops.ORACLES)
-    out.update(waveops.ORACLES)
-    out.update(lmops.ORACLES)
-    out.update(graphsweep.ORACLES)
-    out.update(ccoeffops.ORACLES)
-    out.update(dedupeval.ORACLES)
-    out.update(peakops.ORACLES)
-    out.update(bitempops.ORACLES)
-    out.update(webgraph.ORACLES)
-    out.update(synthops.ORACLES)
-    out.update(motifops.ORACLES)
-    out.update(anfops.ORACLES)
-    out.update(evalops2.ORACLES)
-    out.update(joinorderops.ORACLES)
-    out.update(eigops.ORACLES)
-    out.update(noiseops.ORACLES)
-    out.update(histops.ORACLES)
-    out.update(opsaudit.ORACLES)
-    out.update(chainops.ORACLES)
-    out.update(cascadeops.ORACLES)
-    out.update(schedops.ORACLES)
-    out.update(sketchest.ORACLES)
-    out.update(htmlops.ORACLES)
-    out.update(walkops.ORACLES)
-    out.update(corpusstats.ORACLES)
-    out.update(tsevalops.ORACLES)
-    out.update(recops.ORACLES)
-    out.update(diffops.ORACLES)
-    out.update(governops.ORACLES)
-    out.update(misops.ORACLES)
-    out.update(experimentops.ORACLES)
-    out.update(experimentops2.ORACLES)
-    out.update(causalops.ORACLES)
-    out.update(mlops.ORACLES)
-    out.update(mlops2.ORACLES)
-    out.update(mstops.ORACLES)
-    out.update(privops.ORACLES)
-    out.update(privops2.ORACLES)
-    out.update(suffixops.ORACLES)
-    out.update(genevalops.ORACLES)
-    out.update(graphsim.ORACLES)
-    out.update(spectrops.ORACLES)
-    out.update(hurstops.ORACLES)
-    out.update(flowops.ORACLES)
-    out.update(rakeops.ORACLES)
-    out.update(brierops.ORACLES)
-    out.update(hmmops.ORACLES)
-    out.update(streamsketch.ORACLES)
-    out.update(bwtops.ORACLES)
-    out.update(rankstats2.ORACLES)
-    out.update(geomops.ORACLES)
-    out.update(voteops.ORACLES)
-    out.update(boostops.ORACLES)
-    out.update(colorops.ORACLES)
-    out.update(collocops.ORACLES)
-    out.update(styloops.ORACLES)
-    out.update(hwops.ORACLES)
-    out.update(rakingops.ORACLES)
-    out.update(filterops.ORACLES)
-    out.update(panelops.ORACLES)
-    out.update(infoops.ORACLES)
-    out.update(transportops.ORACLES)
-    out.update(conformops.ORACLES)
-    out.update(succinctops.ORACLES)
-    out.update(codingops.ORACLES)
-    out.update(banditops.ORACLES)
-    out.update(stopops.ORACLES)
-    out.update(morrisops.ORACLES)
-    out.update(tourops.ORACLES)
-    out.update(crdtops.ORACLES)
-    out.update(quorumops.ORACLES)
-    out.update(zarrops.ORACLES)
-    out.update(sortnetops.ORACLES)
-    out.update(lzops.ORACLES)
-    out.update(csketchops.ORACLES)
-    out.update(stratops.ORACLES)
-    out.update(driftops.ORACLES)
+    out: dict[str, str] = {
+        name: sql for m in _LIBRARY for name, sql in m.ORACLES.items()
+    }
     # flagship oracles: the deterministic golden fixtures (absolute path —
     # generated on demand so DuckDB can read them even if queries() ran in
     # another process)

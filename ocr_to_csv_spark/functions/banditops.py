@@ -31,7 +31,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .util import table
+from .util import one_row
 
 ARMS = (300, 500, 700)  # Bernoulli p in milli
 T_STEPS = 64
@@ -51,17 +51,10 @@ def _reward(a: int, t: Column) -> Column:
     ).cast("long")
 
 
-def _one_row(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # anchor the computation to the corpus (row count validates the
-    # sf_dir contract) even though the streams are data-independent
-    d = table(spark, sf_dir, "region")
-    return d.agg(F.count(F.lit(1)).cast("long").alias("n_regions"))
-
-
 def q_ucb_bandit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UCB1 replay (module doc): one row (t_steps, n_0, n_1, n_2,
     s_total, best_arm)."""
-    base = _one_row(spark, sf_dir)
+    base = one_row(spark, sf_dir)
     k = len(ARMS)
 
     def step(acc, t):
@@ -118,7 +111,7 @@ def q_ucb_bandit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_etc_bandit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explore-then-commit replay (module doc): same shape as
     q_ucb_bandit."""
-    base = _one_row(spark, sf_dir)
+    base = one_row(spark, sf_dir)
     k = len(ARMS)
     explore = k * ETC_M
 

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .util import DUCK_HEX32, hex32, table
+from .util import DUCK_HEX32, hex32, one_row, table
 
 MO_COUNTERS = 4
 MO_STEPS = 2048
@@ -35,15 +35,10 @@ FM_BITS = 24
 FM_PHI_MICRO = 773510  # φ·1e6
 
 
-def _one_row(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "region")
-    return d.agg(F.count(F.lit(1)).cast("long").alias("n_regions"))
-
-
 def q_morris_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morris counters (module doc): per counter (counter_id, c_final,
     est, true_n, err_milli)."""
-    base = _one_row(spark, sf_dir)
+    base = one_row(spark, sf_dir)
 
     threshs = F.array(
         *[F.lit((1 << 30) >> c).cast("long") for c in range(31)]

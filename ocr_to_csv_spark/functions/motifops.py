@@ -48,15 +48,6 @@ MP_W = 7  # matrix-profile window length (days)
 MP_PACK = 128  # index packing base (span ≤ 64 < 128)
 
 
-def _codes(col: Column) -> Column:
-    """Ascii codes of the first SW_MAXLEN chars (expression only)."""
-    s = F.substring(col, 1, SW_MAXLEN)
-    return F.transform(
-        F.sequence(F.lit(1), F.length(s)),
-        lambda i: F.ascii(F.substr(s, i, F.lit(1))).cast("long"),
-    )
-
-
 def _sw_col(xa: Column, xb: Column) -> Column:
     """Smith–Waterman score via a flat-matrix nested fold (module doc).
 

@@ -29,7 +29,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .util import DUCK_HEX32, hex32, table
+from .util import DUCK_HEX32, hex32, one_row
 
 SN_N = 16
 N_ARRAYS = 6
@@ -54,11 +54,6 @@ def _batcher_pairs(n: int) -> list[tuple[int, int]]:
 BATCHER = _batcher_pairs(SN_N)
 
 
-def _one_row(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "region")
-    return d.agg(F.count(F.lit(1)).cast("long").alias("n_regions"))
-
-
 def _arr(tag: int) -> Column:
     return F.array(
         *[
@@ -71,7 +66,7 @@ def _arr(tag: int) -> Column:
 def q_batcher_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per probe array (module doc): (arr_id, n_comparators, sorted_ok,
     head, tail)."""
-    base = _one_row(spark, sf_dir)
+    base = one_row(spark, sf_dir)
     rows = []
     for tag in range(N_ARRAYS):
         a0 = _arr(tag)
@@ -115,7 +110,7 @@ def q_batcher_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_pancake_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per probe array (module doc): (arr_id, n_flips, sorted_ok)."""
-    base = _one_row(spark, sf_dir)
+    base = one_row(spark, sf_dir)
     rows = []
     for tag in range(N_ARRAYS):
         a0 = _arr(tag)

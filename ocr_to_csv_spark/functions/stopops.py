@@ -28,17 +28,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .util import DUCK_HEX32, hex32, table
+from .util import DUCK_HEX32, hex32, one_row
 
 M_STREAMS = 32
 N_CAND = 24
 SKIP = 8  # floor(24/e)
 MEDIAN = 1 << 31
-
-
-def _one_row(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "region")
-    return d.agg(F.count(F.lit(1)).cast("long").alias("n_regions"))
 
 
 def _val(m: Column, i: Column) -> Column:
@@ -52,7 +47,7 @@ def _val(m: Column, i: Column) -> Column:
 def q_secretary_stop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row (module doc): (n_streams, n_cand, skip, n_success,
     success_milli)."""
-    base = _one_row(spark, sf_dir)
+    base = one_row(spark, sf_dir)
     streams = F.transform(
         F.sequence(F.lit(0), F.lit(M_STREAMS - 1)),
         lambda m: _secretary_one(m),
@@ -93,7 +88,7 @@ def _secretary_one(m: Column) -> Column:
 def q_prophet_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row (module doc): (n_streams, n_cand, total_ratio_milli,
     mean_ratio_milli)."""
-    base = _one_row(spark, sf_dir)
+    base = one_row(spark, sf_dir)
 
     def one(m):
         idx = F.sequence(F.lit(1), F.lit(N_CAND))

@@ -30,7 +30,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .util import table
+from .util import one_row
 
 N_CITY = 16
 GRID = 4096
@@ -49,11 +49,6 @@ DIST = [
 PAIRS = [
     (i, j) for i in range(1, N_CITY - 1) for j in range(i + 1, N_CITY)
 ]
-
-
-def _one_row(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "region")
-    return d.agg(F.count(F.lit(1)).cast("long").alias("n_regions"))
 
 
 def _dist_arr() -> Column:
@@ -125,7 +120,7 @@ def _tour_cost(tour: Column) -> Column:
 
 def q_tsp_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row (module doc): (n_cities, tour, cost)."""
-    base = _one_row(spark, sf_dir)
+    base = one_row(spark, sf_dir)
     tour = _nn_tour()
     return base.select(
         F.lit(N_CITY).cast("long").alias("n_cities"),
@@ -169,7 +164,7 @@ def _two_opt(tour0: Column) -> Column:
 
 def q_tsp_2opt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row (module doc): (n_cities, tour, cost, nn_cost)."""
-    base = _one_row(spark, sf_dir)
+    base = one_row(spark, sf_dir)
     nn = _nn_tour()
     base = base.withColumn("nn_tour", nn)
     t2 = _two_opt(F.col("nn_tour"))

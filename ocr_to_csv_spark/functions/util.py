@@ -32,6 +32,14 @@ def table(spark, sf_dir: str, name: str, spread: bool = False):
     return df
 
 
+def one_row(spark, sf_dir: str):
+    """One-row anchor for data-independent queries: the region count
+    ties the computation to the corpus and validates the sf_dir
+    contract."""
+    d = table(spark, sf_dir, "region")
+    return d.agg(F.count(F.lit(1)).cast("long").alias("n_regions"))
+
+
 _SCRATCH_GENS: dict[str, list[list[str]]] = {}
 
 

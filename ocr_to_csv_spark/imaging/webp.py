@@ -657,31 +657,6 @@ def _inv_color_indexing_np(
     return pal[idx].reshape(-1)
 
 
-def _inv_color_indexing(
-    px: list[int], w: int, h: int, palette: list[int], width_bits: int
-) -> list[int]:
-    out = [0] * (w * h)
-    if width_bits == 0:
-        for i, p in enumerate(px):
-            idx = (p >> 8) & 0xFF
-            if idx >= len(palette):
-                raise ValueError("vp8l: palette index out of range")
-            out[i] = palette[idx]
-        return out
-    per = 1 << width_bits  # packed pixels per coded pixel
-    ibits = 8 >> width_bits  # bits per index
-    mask = (1 << ibits) - 1
-    cw = _sub_size(w, width_bits)
-    for y in range(h):
-        for x in range(w):
-            packed = (px[y * cw + (x >> width_bits)] >> 8) & 0xFF
-            idx = (packed >> (ibits * (x & (per - 1)))) & mask
-            if idx >= len(palette):
-                raise ValueError("vp8l: palette index out of range")
-            out[y * w + x] = palette[idx]
-    return out
-
-
 # ------------------------------------------------------------------- decode
 
 

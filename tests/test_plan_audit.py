@@ -10,9 +10,9 @@ baselines and broadcast crosses whose build side is provably tiny
 probe lists) — each entry names why it is safe.
 """
 
-import importlib.util
-
 import pytest
+
+import __spark_entry__ as entrymod
 
 SF = "/root/testdata/sf0.001"
 
@@ -182,12 +182,7 @@ BNLJ_ALLOWED = {
 
 
 def _registry():
-    spec = importlib.util.spec_from_file_location(
-        "entry_for_plan_audit", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
-    return m.queries()
+    return entrymod.queries()
 
 
 def test_no_unexpected_cartesian_or_nested_loop(spark):
