@@ -60,13 +60,11 @@ def _stage_tag(*modules) -> str:
     staged fixture transitively depends on, so a synth/golden-formula
     OR codec change regenerates the staging instead of silently
     comparing against stale /tmp goldens even when the manual
-    *_STAGE_V bump is forgotten (ADVICE r3, r4). Falls back to module
-    names when source is unreadable (zipimport deploy)."""
-    import hashlib
-    import inspect
-
+    *_STAGE_V bump is forgotten (ADVICE r3, r4). Hashed by
+    ``util.source_md5``, the golden-cache key ``util.gold_tag`` uses."""
     from ocr_to_csv_spark.extraction import audio as _dep_audio
     from ocr_to_csv_spark.extraction import video as _dep_video
+    from ocr_to_csv_spark.functions.util import source_md5
     from ocr_to_csv_spark.imaging import codecs as _dep_codecs
     from ocr_to_csv_spark.imaging import gif as _dep_gif
     from ocr_to_csv_spark.imaging import jpeg as _dep_jpeg
@@ -88,12 +86,7 @@ def _stage_tag(*modules) -> str:
         _dep_video,
         _dep_archive,
     )
-    h = hashlib.md5()
-    for m in (*modules, *transitive):
-        try:
-            h.update(inspect.getsource(m).encode())
-        except (OSError, TypeError):
-            h.update(getattr(m, "__name__", str(m)).encode())
+    h = source_md5((*modules, *transitive))
     try:  # this file by path — the module may be loaded under any name
         with open(__file__, "rb") as f:
             h.update(f.read())

@@ -24,22 +24,14 @@ media_ref so Catalyst/AQE pick broadcast vs shuffle by size.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-# staging registry: each extract() materializes its segmentation output to
-# a scratch parquet dir; older dirs are removed so long sessions stay
-# bounded (the immediately-previous one is kept so DataFrames returned by
-# the previous call remain readable — see extract() docstring for the
-# lifetime contract), and whatever survives is removed at process exit
-_STAGE_DIRS: list[str] = []
+from .. import scratch
 
 
 def _parquet_rowcount(path: str) -> int:
@@ -54,42 +46,6 @@ def _parquet_rowcount(path: str) -> int:
             total += pq.ParquetFile(os.path.join(path, name)).metadata.num_rows
     return total
 
-
-@atexit.register
-def _cleanup_stage_dirs() -> None:
-    while _STAGE_DIRS:
-        shutil.rmtree(_STAGE_DIRS.pop(), ignore_errors=True)
-
-
-_SWEPT_STALE = False
-
-
-def _sweep_stale_stage_dirs(max_age_s: int = 7200) -> None:
-    """Remove staging dirs leaked by crashed/SIGKILLed runs (atexit never
-    fires for those). Age-gated so staging dirs of jobs running
-    concurrently on the same host are never touched; runs once per
-    process, at the first extract() call."""
-    global _SWEPT_STALE
-    if _SWEPT_STALE:
-        return
-    _SWEPT_STALE = True
-    import time
-
-    now = time.time()
-    tmp = tempfile.gettempdir()
-    try:
-        names = os.listdir(tmp)
-    except OSError:
-        return
-    for name in names:
-        if not name.startswith(("ocr2csv_seg_stage_", "ocr2csv_pdf_stage_")):
-            continue
-        p = os.path.join(tmp, name)
-        try:
-            if p not in _STAGE_DIRS and now - os.path.getmtime(p) > max_age_s:
-                shutil.rmtree(p, ignore_errors=True)
-        except OSError:
-            pass
 
 DATE_REGEX = r"^\d{1,2}/\d{1,2}/(\d{4}|\d{2})$"
 
@@ -373,9 +329,8 @@ def _expand_pdf_spans(
     )
     pages = pdf_blobs.mapInPandas(_pdf_pages_batches, schema=PDF_PAGE_SCHEMA)
     # one decode per PDF: stage the fan-out (3 consumers below)
-    stage_dir = tempfile.mkdtemp(prefix="ocr2csv_pdf_stage_")
+    stage_dir = scratch.path()
     pages.write.mode("overwrite").parquet(stage_dir)
-    _STAGE_DIRS.append(stage_dir)
     if _parquet_rowcount(stage_dir) == 0:  # footer metadata, no Spark job
         empty = spark.createDataFrame(
             [], "doc_id string, kind string, text string, media_ref string, offset int"
@@ -444,25 +399,24 @@ def extract(
     shuffle_partitions: int | None = None,
     _salt_granularity: str = "cell",
 ) -> dict[str, DataFrame]:
-    """Run the full pipeline; returns {'spans', 'rows', 'quarantine'} DataFrames.
+    """Run the full pipeline; returns {'spans', 'rows', 'quarantine',
+    'review'} DataFrames.
 
     spans: (doc_id, kind, text, media_ref, order) — the per-document ordered
     span sequence (the north_rule invariant surface).
     rows:  (doc_id, page, row, name, time_in, time_out, hours, purpose,
             date, day) — the flattened CSV-row table (reference main.py:182).
+    review: the cells the reference would have asked a human about.
 
-    Lifetime contract: each call stages segmentation output to a scratch
-    parquet dir; only the TWO most recent staging dirs are kept, so the
-    DataFrames returned by a call remain readable until two further
-    ``extract()`` calls have run — consume (or write out) results before
-    that, or they fail with FileNotFoundException. All surviving staging
-    dirs are removed at interpreter exit.
+    Lifetime contract: each call stages its PDF fan-out and segmentation
+    output to ``scratch`` dirs, so the returned DataFrames stay readable
+    until the enclosing ``scratch.scope()`` exits, or until the process
+    exits when there is none.
     """
     n_part = shuffle_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
     py_factor = _py_stage_factor(spark, n_part)
-    _sweep_stale_stage_dirs()
 
     spans, quarantine = quarantine_bad_kinds(explode_spans(documents))
 
@@ -521,15 +475,7 @@ def extract(
         # (ADVICE r4).
         salt_cols = ("doc_id",)
     seg = seg.repartition(py_factor * n_part, *salt_cols)
-    stage_dir = tempfile.mkdtemp(prefix="ocr2csv_seg_stage_")
-    seg.write.mode("overwrite").parquet(stage_dir)
-    seg = spark.read.parquet(stage_dir)
-    _STAGE_DIRS.append(stage_dir)
-    # one extract() appends up to TWO dirs (pdf fan-out + segment), so
-    # keep four: the current call's pair plus the previous call's pair
-    # (the documented previous-results-stay-readable window)
-    while len(_STAGE_DIRS) > 4:
-        shutil.rmtree(_STAGE_DIRS.pop(0), ignore_errors=True)
+    seg = scratch.stage(seg)
 
     # aliases: small dictionary dimension → driver-collected (overlapped
     # with the PDF stage above) + broadcast to every classify task

@@ -33,13 +33,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import scratch
 from .textops import QC_BIAS, QC_BUCKETS, _qc_weight
 from .util import (
     DUCK_HEX32,
     DUCK_TOKENS,
     hex32,
-    scratch_new_gen,
-    scratch_stage,
     table,
     tokens,
 )
@@ -64,10 +63,9 @@ def q_pareto_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     maximization (module doc): (custkey, spend, cnt, layer)."""
     remaining = _profiles(spark, sf_dir)
     outs = []
-    scratch_new_gen("pareto")
     for layer in range(1, PL_LAYERS + 1):
-        # scratch staging, not localCheckpoint: see util.scratch_stage
-        remaining = scratch_stage(remaining, "pareto")
+        # scratch staging, not localCheckpoint: see scratch.stage
+        remaining = scratch.stage(remaining)
         # suffix max over strictly-greater spend as a RUNNING max in
         # descending order: a (1, unboundedFollowing) frame makes Spark
         # rescan the remaining frame per row — O(n^2) per layer

@@ -41,7 +41,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .util import gold_tag, hash_min_fixpoint, scratch_new_gen, table
+from .util import gold_tag, hash_min_fixpoint, table
 
 EPS2_BASE = 900   # ε² at the 1500-customer reference scale (ε = 30)
 EPS2_REF_N = 1500  # reference customer count
@@ -165,8 +165,7 @@ def q_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     lbl = core.select(F.col("k").alias("cid"), F.col("k").alias("lbl"))
-    scratch_new_gen("dbscan")
-    lbl = hash_min_fixpoint(cc_edges, lbl, "dbscan", _CC_SWEEPS).select(
+    lbl = hash_min_fixpoint(cc_edges, lbl, _CC_SWEEPS).select(
         F.col("cid").alias("id"), "lbl"
     )
     pts = _points(spark, sf_dir).select("k")

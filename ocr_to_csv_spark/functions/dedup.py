@@ -14,10 +14,11 @@ Parity: md5 hex is identical across Spark and DuckDB; all float-free.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .util import DUCK_HEX32, hex32, table
+from .. import scratch
+from .util import DUCK_HEX32, global_seq, hex32, table
 
 N_SEEDS = 8  # minhash permutations
 N_BANDS = 4  # LSH bands of 2 rows each
@@ -625,10 +626,6 @@ def q_ppjoin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB candidate volume is governed by the df of the rarest
     prefix tokens; the vocabulary rank table is vocab-sized; nothing
     all-pairs, nothing doc-sized on the driver."""
-    from .util import scratch_new_gen, scratch_stage
-
-    for _t in ("ppj_members", "ppj_ids", "ppj_pre", "ppj_pairs"):
-        scratch_new_gen(_t)
     d = table(spark, sf_dir, "documents", spread=True)
     docsets = d.select(
         "doc_id",
@@ -642,9 +639,7 @@ def q_ppjoin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups = keyed.groupBy("set_key").agg(
         F.min("doc_id").alias("gid"), F.count("*").alias("c")
     )
-    members = scratch_stage(
-        keyed.join(groups, "set_key").select("gid", "doc_id"), "ppj_members"
-    )
+    members = scratch.stage(keyed.join(groups, "set_key").select("gid", "doc_id"))
     # one representative token set per group (rows with equal set_key
     # have equal toks, so min_by is deterministic here)
     reps = (
@@ -655,17 +650,16 @@ def q_ppjoin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tf = reps.select("gid", "n", F.explode("toks").alias("tok"))
     vocab = tf.groupBy("tok").agg(F.count("*").alias("df"))
-    w_vocab = Window.orderBy(F.asc("df"), F.asc("tok"))
-    ranked = vocab.withColumn("r", F.row_number().over(w_vocab))
-    ids = scratch_stage(
+    # tok is unique in vocab, so (df, tok) is a total order
+    ranked = global_seq(vocab, ["df", "tok"], out="r")
+    ids = scratch.stage(
         tf.join(F.broadcast(ranked), "tok")
         .groupBy("gid")
         .agg(
             F.sort_array(F.collect_list("r")).alias("rids"),
             F.any_value("n").alias("n"),
         )
-        .select("gid", "rids", "n"),
-        "ppj_ids",
+        .select("gid", "rids", "n")
     )
     # prefix length n - ceil(t*n) + 1, with ceil done in exact integers;
     # rids is rarity-sorted, so the prefix is a plain slice
@@ -674,11 +668,10 @@ def q_ppjoin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         - F.floor((JAC_T_NUM * F.col("n") + JAC_T_DEN - 1) / JAC_T_DEN)
         + 1
     ).cast("int")
-    pre = scratch_stage(
+    pre = scratch.stage(
         ids.select(
             "gid", F.explode(F.slice("rids", 1, pref_len)).alias("rid")
-        ),
-        "ppj_pre",
+        )
     )
     cand = (
         pre.alias("a")
@@ -696,7 +689,7 @@ def q_ppjoin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").alias("nb"),
     )
     inter = F.size(F.array_intersect("ra", "rb")).cast("long")
-    setpairs = scratch_stage(
+    setpairs = scratch.stage(
         cand.join(ia, "ga")
         .join(ib, "gb")
         .withColumn("inter", inter)
@@ -704,8 +697,7 @@ def q_ppjoin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "uni", (F.col("na") + F.col("nb") - F.col("inter")).cast("long")
         )
         .filter(JAC_T_DEN * F.col("inter") >= JAC_T_NUM * F.col("uni"))
-        .select("ga", "gb", "inter", "uni"),
-        "ppj_pairs",
+        .select("ga", "gb", "inter", "uni")
     )
     ma = members.select(F.col("gid").alias("ga"), F.col("doc_id").alias("da"))
     mb = members.select(F.col("gid").alias("gb"), F.col("doc_id").alias("db"))

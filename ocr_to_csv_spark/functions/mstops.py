@@ -22,9 +22,9 @@ Scale design (100 TB):
       arrives in O(log diameter) sweeps instead of O(diameter). The
       graph has at most one edge per live component (component-count-
       sized, geometrically shrinking); change detection is ONE
-      1-row agg per sweep. Loop state severs through parquet scratch
-      staging (``_stage``), not ``localCheckpoint`` — see _stage's
-      docstring for the measured checkpoint pathology this avoids.
+      1-row agg per sweep (``util.hash_min_fixpoint``). Loop state
+      severs through ``scratch.stage``, not ``localCheckpoint`` — see
+      its docstring for the measured checkpoint pathology this avoids.
   The strict total order (w, lo, hi) makes edge weights effectively
   distinct, so the MSF is UNIQUE (standard exchange argument) and an
   independent pure-Python Kruskal with union-find is a bit-exact
@@ -52,7 +52,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .linkpred import _EDGES_SQL, _undirected_edges
-from .util import gold_tag, scratch_new_gen, scratch_stage
+from .. import scratch
+from .util import gold_tag, hash_min_fixpoint
 
 MSF_ROUNDS = 24  # > log2(max component count) at any test sf
 _CONTRACT_SWEEPS = 40  # fixpoint guard; loop exits on no-change
@@ -118,15 +119,12 @@ def q_boruvka_msf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed Borůvka minimum spanning forest (module docstring).
     Unique under the strict (w, lo, hi) order; golden-oracled by an
     independent pure-Python Kruskal."""
-    for _tag in ("e", "comp", "sel", "msf", "ce", "lbl", "lblswp"):
-        scratch_new_gen(_tag)  # reclaim the previous invocation's scratch
-    e = scratch_stage(_weighted_edges(spark, sf_dir), "e")
-    comp = scratch_stage(
+    e = scratch.stage(_weighted_edges(spark, sf_dir))
+    comp = scratch.stage(
         e.select(F.col("lo").alias("id"))
         .unionByName(e.select(F.col("hi").alias("id")))
         .distinct()
-        .select("id", F.col("id").alias("comp")),
-        "comp",
+        .select("id", F.col("id").alias("comp"))
     )
     msf: DataFrame | None = None
     for _ in range(MSF_ROUNDS):
@@ -147,90 +145,36 @@ def q_boruvka_msf(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand = ec.select(F.col("clo").alias("c"), pick.alias("e")).unionByName(
             ec.select(F.col("chi").alias("c"), pick.alias("e"))
         )
-        sel = scratch_stage(
+        sel = scratch.stage(
             cand.groupBy("c")
             .agg(F.min("e").alias("m"))
             .select("m.*")
-            .distinct(),
-            "sel",
+            .distinct()
         )
         if sel.isEmpty():
             break
         picked = sel.select("lo", "hi", "w")
-        msf = scratch_stage(
+        msf = scratch.stage(
             picked
             if msf is None
-            else msf.unionByName(picked).distinct(),
-            "msf",
+            else msf.unionByName(picked).distinct()
         )
         # Contract: hash-min to fixpoint on the component multigraph.
         ce = sel.select(F.col("clo").alias("a"), F.col("chi").alias("b"))
-        ce = scratch_stage(
+        ce = scratch.stage(
             ce.unionByName(
                 ce.select(F.col("b").alias("a"), F.col("a").alias("b"))
-            ).distinct(),
-            "ce",
+            ).distinct()
         )
-        lbl = scratch_stage(
+        lbl = scratch.stage(
             comp.select(F.col("comp").alias("cid"))
             .distinct()
-            .select("cid", F.col("cid").alias("lbl")),
-            "lbl",
+            .select("cid", F.col("cid").alias("lbl"))
         )
-        for _sweep in range(_CONTRACT_SWEEPS):
-            # hash-min sweep + ONE pointer jump (lbl := lbl[lbl]) per
-            # sweep: the jump makes distance-to-minimum at least halve
-            # each sweep, so fixpoint arrives in O(log diameter) sweeps
-            # instead of O(diameter). One ACTION per sweep (the change
-            # count materializes the persisted next label table) — the
-            # old per-sweep localCheckpoint + isEmpty pair cost 2-3
-            # full jobs each and dominated wall time at sf0.1 (433 s →
-            # the r4 fix; data here is component-sized, job overhead
-            # is the cost).
-            nb = (
-                ce.join(
-                    lbl.select(F.col("cid").alias("a"), F.col("lbl").alias("la")),
-                    "a",
-                )
-                .groupBy("b")
-                .agg(F.min("la").alias("mn"))
-            )
-            stepped = (
-                lbl.join(nb, lbl.cid == nb.b, "left")
-                .select(
-                    "cid",
-                    F.col("lbl").alias("old"),
-                    F.least(
-                        "lbl", F.coalesce("mn", F.col("lbl"))
-                    ).alias("mid"),
-                )
-            )
-            jump = stepped.select(
-                F.col("cid").alias("jcid"), F.col("mid").alias("jlbl")
-            )
-            new = (
-                stepped.join(jump, stepped.mid == jump.jcid, "left")
-                .select(
-                    "cid",
-                    "old",
-                    F.least(
-                        "mid", F.coalesce("jlbl", F.col("mid"))
-                    ).alias("lbl"),
-                )
-            )
-            if _sweep % 2 == 1:  # sever every 2nd sweep: plan depth
-                # stays <= 2 self-join doublings, half the write jobs
-                new = scratch_stage(new, "lblswp")
-            n_changed = new.agg(
-                F.sum((F.col("lbl") != F.col("old")).cast("long"))
-            ).collect()[0][0]
-            lbl = new.drop("old")
-            if not n_changed:
-                break
-        comp = scratch_stage(
+        lbl = hash_min_fixpoint(ce, lbl, _CONTRACT_SWEEPS)
+        comp = scratch.stage(
             comp.join(lbl, comp.comp == lbl.cid)
-            .select("id", F.col("lbl").alias("comp")),
-            "comp",
+            .select("id", F.col("lbl").alias("comp"))
         )
 
     assert msf is not None

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .. import scratch
+
 
 def table(spark, sf_dir: str, name: str, spread: bool = False):
     """Read an sf table. ``spread=True`` is for compute-heavy map stages
@@ -40,48 +42,14 @@ def one_row(spark, sf_dir: str):
     return d.agg(F.count(F.lit(1)).cast("long").alias("n_regions"))
 
 
-_SCRATCH_GENS: dict[str, list[list[str]]] = {}
-
-
-def scratch_stage(df, tag: str):
-    """Materialize iterative loop state to a parquet scratch dir and
-    read it back — the extraction pipeline's segment-staging idiom. In
-    this Spark build, chained ``localCheckpoint`` materialization jobs
-    grow super-linearly across checkpoint generations (measured 1.6 s →
-    6.2 s → 63 s per call in boruvka_msf at sf0.1, driver spinning in
-    Catalyst stats estimation), so loop state severs through the
-    filesystem: constant cost per round; the production analogue is an
-    Iceberg scratch table. Dirs are generation-scoped per ``tag``:
-    call ``scratch_new_gen(tag)`` at the top of each query invocation —
-    all generations but the previous one are deleted (its result
-    DataFrame may still be consumed by the caller)."""
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix=f"ocr2csv_stage_{tag}_")
-    df.write.mode("overwrite").parquet(d)
-    out = df.sparkSession.read.parquet(d)
-    _SCRATCH_GENS.setdefault(tag, [[]])[-1].append(d)
-    return out
-
-
-def scratch_new_gen(tag: str) -> None:
-    import shutil
-
-    gens = _SCRATCH_GENS.setdefault(tag, [[]])
-    while len(gens) > 1:
-        for d in gens.pop(0):
-            shutil.rmtree(d, ignore_errors=True)
-    gens.append([])
-
-
-def hash_min_fixpoint(edges, labels, tag: str, max_sweeps: int = 40):
+def hash_min_fixpoint(edges, labels, max_sweeps: int = 40):
     """Hash-min label propagation to fixpoint over a symmetric edge
     list — the contraction/connected-components inner loop. Per sweep:
     one keyed join + min-agg (the hash-min step), then ONE pointer jump
     (lbl := min(lbl, lbl[lbl])) so distance-to-minimum at least halves
     — fixpoint in O(log diameter) sweeps instead of O(diameter). Change
     detection is a single 1-row agg per sweep, and state severs through
-    ``scratch_stage`` every second sweep (see its docstring for the
+    ``scratch.stage`` every second sweep (see its docstring for the
     localCheckpoint pathology this avoids). ``edges``: (a, b) both
     directions; ``labels``: (cid, lbl), already staged/cheap to
     recompute. Returns the fixpoint (cid, lbl)."""
@@ -108,7 +76,7 @@ def hash_min_fixpoint(edges, labels, tag: str, max_sweeps: int = 40):
             F.least("mid", F.coalesce("jlbl", F.col("mid"))).alias("lbl"),
         )
         if sweep % 2 == 1:
-            new = scratch_stage(new, tag)
+            new = scratch.stage(new)
         n_changed = new.agg(
             F.sum((F.col("lbl") != F.col("old")).cast("long"))
         ).collect()[0][0]
@@ -157,24 +125,33 @@ def global_seq(df, order_cols: list[str], out: str = "seq"):
     )
 
 
+def source_md5(modules):
+    """md5 over the source of each module, or over its name when the
+    source is unreadable (zipimport deploy): the content key of the
+    /tmp staged-golden caches. Returns the hash object so callers can
+    fold in more bytes."""
+    import hashlib
+    import inspect
+
+    h = hashlib.md5()
+    for m in modules:
+        try:
+            h.update(inspect.getsource(m).encode())
+        except (OSError, TypeError):
+            h.update(getattr(m, "__name__", str(m)).encode())
+    return h
+
+
 def gold_tag(sf_dir: str, module_name: str) -> str:
     """Cache tag for /tmp staged-golden parquet files: the sf-dir
     basename plus a content hash of the module that defines the golden
     formula, so a formula change (e.g. the r4 dbscan density-adaptive-ε
     change) invalidates warm /tmp caches instead of silently comparing
-    against stale goldens (ADVICE r4). Falls back to the bare module
-    name when source is unreadable (zipimport deploy)."""
-    import hashlib
-    import inspect
+    against stale goldens (ADVICE r4)."""
     import os
     import sys
 
-    h = hashlib.md5()
-    m = sys.modules.get(module_name)
-    try:
-        h.update(inspect.getsource(m).encode())
-    except (OSError, TypeError):
-        h.update(module_name.encode())
+    h = source_md5([sys.modules.get(module_name, module_name)])
     base = os.path.basename(sf_dir.rstrip("/")) or "default"
     return f"{base}_{h.hexdigest()[:8]}"
 

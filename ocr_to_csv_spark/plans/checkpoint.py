@@ -30,6 +30,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import scratch
 from ..sources import Catalog
 
 STATE_SCHEMA = (
@@ -111,54 +112,55 @@ def run_extract_checkpointed(
 
     processed = 0
     for group in groups:
-        gdocs = docs.filter(F.col("_bucket").isin(group)).drop("_bucket")
-        res = pipeline.extract(spark, gdocs, tabs["media"], tabs["aliases"])
+        with scratch.scope():  # a group's staging dies with the group
+            gdocs = docs.filter(F.col("_bucket").isin(group)).drop("_bucket")
+            res = pipeline.extract(spark, gdocs, tabs["media"], tabs["aliases"])
 
-        spans = res["spans"].withColumn(
-            "bucket", bucket_of(F.col("doc_id"), n_buckets)
-        )
-        rows = res["rows"].withColumn(
-            "bucket", bucket_of(F.col("doc_id"), n_buckets)
-        )
-        # idempotent per-bucket commit: dynamic partition overwrite replaces
-        # exactly the buckets in this group, never earlier ones (Iceberg:
-        # overwritePartitions — see sources/catalog.py mapping)
-        cat = Catalog(spark, out_dir)
-        cat.overwrite_partitions(spans, "extracted", ["bucket"])
-        cat.overwrite_partitions(rows, "rows", ["bucket"])
+            spans = res["spans"].withColumn(
+                "bucket", bucket_of(F.col("doc_id"), n_buckets)
+            )
+            rows = res["rows"].withColumn(
+                "bucket", bucket_of(F.col("doc_id"), n_buckets)
+            )
+            # idempotent per-bucket commit: dynamic partition overwrite replaces
+            # exactly the buckets in this group, never earlier ones (Iceberg:
+            # overwritePartitions — see sources/catalog.py mapping)
+            cat = Catalog(spark, out_dir)
+            cat.overwrite_partitions(spans, "extracted", ["bucket"])
+            cat.overwrite_partitions(rows, "rows", ["bucket"])
 
-        # lineage metrics per bucket, appended only after outputs committed
-        per_bucket = (
-            spans.groupBy("bucket")
-            .agg(
-                F.countDistinct("doc_id").alias("docs_done"),
-                F.count("*").alias("span_count"),
+            # lineage metrics per bucket, appended only after outputs committed
+            per_bucket = (
+                spans.groupBy("bucket")
+                .agg(
+                    F.countDistinct("doc_id").alias("docs_done"),
+                    F.count("*").alias("span_count"),
+                )
+                .join(
+                    rows.groupBy("bucket").agg(F.count("*").alias("row_count")),
+                    "bucket",
+                    "left",
+                )
             )
-            .join(
-                rows.groupBy("bucket").agg(F.count("*").alias("row_count")),
-                "bucket",
-                "left",
+            now = time.time()
+            present = {r["bucket"]: r for r in per_bucket.collect()}
+            state_rows = [
+                (
+                    run_id,
+                    int(b),
+                    int(present[b]["docs_done"]) if b in present else 0,
+                    int(present[b]["span_count"]) if b in present else 0,
+                    int(present[b]["row_count"] or 0) if b in present else 0,
+                    "done",
+                    now,
+                )
+                for b in group
+            ]
+            cat_state = Catalog(spark, os.path.dirname(state_dir) or ".")
+            cat_state.append(
+                spark.createDataFrame(state_rows, STATE_SCHEMA).coalesce(1),
+                os.path.basename(state_dir),
             )
-        )
-        now = time.time()
-        present = {r["bucket"]: r for r in per_bucket.collect()}
-        state_rows = [
-            (
-                run_id,
-                int(b),
-                int(present[b]["docs_done"]) if b in present else 0,
-                int(present[b]["span_count"]) if b in present else 0,
-                int(present[b]["row_count"] or 0) if b in present else 0,
-                "done",
-                now,
-            )
-            for b in group
-        ]
-        cat_state = Catalog(spark, os.path.dirname(state_dir) or ".")
-        cat_state.append(
-            spark.createDataFrame(state_rows, STATE_SCHEMA).coalesce(1),
-            os.path.basename(state_dir),
-        )
         processed += len(group)
 
     return {

@@ -26,11 +26,11 @@ already uses.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import scratch
 from ..extraction import pipeline
 from ..functions import curation5, dedup, textops
 from ..sources.snapshots import SnapshotCatalog
@@ -71,56 +71,62 @@ def build_training_set(
 ) -> dict:
     """Run the full corpus→shards job; returns stage counts. Shards
     publish to table 'training_shards' only if the audit passes."""
-    tabs = pipeline.load_corpus(spark, corpus_dir)
-    res = pipeline.extract(spark, tabs["documents"], tabs["media"], tabs["aliases"])
-    spans = res["spans"]
+    # every consumer of the staged tables runs before this returns
+    with scratch.scope():
+        tabs = pipeline.load_corpus(spark, corpus_dir)
+        res = pipeline.extract(
+            spark, tabs["documents"], tabs["media"], tabs["aliases"]
+        )
+        spans = res["spans"]
 
-    stage1 = tempfile.mkdtemp(prefix="ocr2csv_train_docs_")
-    _reassemble(spans).write.mode("overwrite").parquet(
-        os.path.join(stage1, "documents.parquet")
-    )
-    n_docs = spark.read.parquet(os.path.join(stage1, "documents.parquet")).count()
+        stage1 = scratch.path()
+        _reassemble(spans).write.mode("overwrite").parquet(
+            os.path.join(stage1, "documents.parquet")
+        )
+        docs = spark.read.parquet(os.path.join(stage1, "documents.parquet"))
+        n_docs = docs.count()
 
-    # near-dup pass: drop every cluster member except the canonical doc
-    clusters = dedup.q_dedup_clusters(spark, stage1)
-    surv = dedup.q_dedup_survivors(spark, stage1)  # multi-doc clusters only
-    drop = (
-        clusters.join(surv.select("cluster_id", "keep_doc"), "cluster_id")
-        .filter(F.col("doc_id") != F.col("keep_doc"))
-        .select("doc_id")
-    )
-    docs = spark.read.parquet(os.path.join(stage1, "documents.parquet"))
-    deduped = docs.join(drop, "doc_id", "left_anti")
+        # near-dup pass: drop every cluster member except the canonical doc
+        clusters = dedup.q_dedup_clusters(spark, stage1)
+        surv = dedup.q_dedup_survivors(spark, stage1)  # multi-doc clusters only
+        drop = (
+            clusters.join(surv.select("cluster_id", "keep_doc"), "cluster_id")
+            .filter(F.col("doc_id") != F.col("keep_doc"))
+            .select("doc_id")
+        )
+        deduped = docs.join(drop, "doc_id", "left_anti")
 
-    # quality gate: distinct-token floor (same signal as quality_score)
-    toks = F.split(F.col("text"), r"\s+")
-    survivors = deduped.filter(
-        F.size(F.array_distinct(toks)) >= MIN_DISTINCT_TOKENS
-    )
-    stage2 = tempfile.mkdtemp(prefix="ocr2csv_train_clean_")
-    survivors.write.mode("overwrite").parquet(
-        os.path.join(stage2, "documents.parquet")
-    )
-    n_clean = spark.read.parquet(os.path.join(stage2, "documents.parquet")).count()
+        # quality gate: distinct-token floor (same signal as quality_score)
+        toks = F.split(F.col("text"), r"\s+")
+        survivors = deduped.filter(
+            F.size(F.array_distinct(toks)) >= MIN_DISTINCT_TOKENS
+        )
+        stage2 = scratch.path()
+        survivors.write.mode("overwrite").parquet(
+            os.path.join(stage2, "documents.parquet")
+        )
+        n_clean = spark.read.parquet(
+            os.path.join(stage2, "documents.parquet")
+        ).count()
 
-    shards = curation5.q_pack_sequences(spark, stage2)
-    fps = textops.q_fingerprint(spark, stage2).select("doc_id", "fp")
-    out = shards.join(fps, "doc_id")
+        shards = curation5.q_pack_sequences(spark, stage2)
+        fps = textops.q_fingerprint(spark, stage2).select("doc_id", "fp")
+        out = shards.join(fps, "doc_id")
 
-    cat = SnapshotCatalog(spark, catalog_base)
-    # WAP: seed an empty main snapshot (schema only), stage on a branch
-    cat.overwrite(out.limit(0), "training_shards")
-    cat.create_branch("training_shards", "audit")
-    cat.append(out, "training_shards", branch="audit")
-    staged = cat.read("training_shards", branch="audit")
-    n_shard_rows = staged.count()
-    n_dup_fp = (
-        staged.groupBy("fp").count().filter(F.col("count") > 1).count()
-    )
-    n_empty = staged.filter(F.col("n_tokens") <= 0).count()
-    audit_ok = n_shard_rows > 0 and n_dup_fp == 0 and n_empty == 0
-    if audit_ok:
-        cat.fast_forward("training_shards", "audit")
+        cat = SnapshotCatalog(spark, catalog_base)
+        # WAP: seed an empty main snapshot (schema only), stage on a branch
+        cat.overwrite(out.limit(0), "training_shards")
+        cat.create_branch("training_shards", "audit")
+        cat.append(out, "training_shards", branch="audit")
+        staged = cat.read("training_shards", branch="audit")
+        n_shard_rows = staged.count()
+        n_dup_fp = (
+            staged.groupBy("fp").count().filter(F.col("count") > 1).count()
+        )
+        n_empty = staged.filter(F.col("n_tokens") <= 0).count()
+        audit_ok = n_shard_rows > 0 and n_dup_fp == 0 and n_empty == 0
+        if audit_ok:
+            cat.fast_forward("training_shards", "audit")
     return {
         "extracted_docs": n_docs,
         "after_dedup_and_quality": n_clean,

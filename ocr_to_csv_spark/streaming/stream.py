@@ -33,6 +33,7 @@ def stream_extract(
 ) -> None:
     """Drain ``docs_stream_dir`` (directory of documents-parquet files)
     through the extraction pipeline into append-mode parquet sinks."""
+    from .. import scratch
     from ..extraction import pipeline
 
     tabs = pipeline.load_corpus(spark, corpus_dir)
@@ -44,9 +45,12 @@ def stream_extract(
     docs = reader.parquet(docs_stream_dir)
 
     def process_batch(batch_df, batch_id: int) -> None:
-        res = pipeline.extract(batch_df.sparkSession, batch_df, media, aliases)
-        res["spans"].write.mode("append").parquet(os.path.join(out_dir, "extracted"))
-        res["rows"].write.mode("append").parquet(os.path.join(out_dir, "rows"))
+        with scratch.scope():
+            res = pipeline.extract(batch_df.sparkSession, batch_df, media, aliases)
+            res["spans"].write.mode("append").parquet(
+                os.path.join(out_dir, "extracted")
+            )
+            res["rows"].write.mode("append").parquet(os.path.join(out_dir, "rows"))
 
     q = (
         docs.writeStream.foreachBatch(process_batch)

@@ -6,6 +6,7 @@ import shutil
 import pandas as pd
 from pyspark.sql import functions as F
 
+from ocr_to_csv_spark import scratch
 from ocr_to_csv_spark.extraction import pipeline
 from ocr_to_csv_spark.plans import checkpoint as cp
 
@@ -31,11 +32,15 @@ def test_checkpoint_resume_no_recompute(spark, corpus_dir, tmp_path):
     done_after_crash = cp.completed_buckets(spark, os.path.join(out, "run_state"), "r1")
     assert len(done_after_crash) == 2
 
-    # resume: skips the completed buckets, finishes the rest
+    # resume: skips the completed buckets, finishes the rest (3 groups,
+    # each in its own scratch scope, so no staged dir outlives the call)
+    root = os.path.dirname(scratch.path())
+    n_dirs = len(os.listdir(root))
     r2 = cp.run_extract_checkpointed(
         spark, corpus_dir, out, run_id="r1", n_buckets=8, group_size=2
     )
     assert r2["skipped"] == 2 and r2["processed"] == 6
+    assert len(os.listdir(root)) <= n_dirs
 
     # third invocation is a no-op (everything checkpointed)
     r3 = cp.run_extract_checkpointed(

@@ -211,3 +211,25 @@ def test_allowlist_entries_still_exist(spark):
     qs = set(_registry())
     stale = [k for k in BNLJ_ALLOWED if k not in qs]
     assert not stale, f"stale allowlist entries: {stale}"
+
+
+def test_ppjoin_pairs_has_no_single_partition_exchange(spark):
+    """The vocabulary rank of ppjoin_pairs is data-proportional, so no
+    job it runs (staging writes included) may funnel through one
+    partition. Every SQL execution since the start is checked, since
+    staged subtrees are absent from the returned DataFrame's plan."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def plans():
+        ex = store.executionsList()
+        return {
+            ex.apply(i).executionId(): ex.apply(i).physicalPlanDescription()
+            for i in range(ex.size())
+        }
+
+    seen = set(plans())
+    entrymod.queries()["ppjoin_pairs"](spark, SF).collect()
+    new = {k: v for k, v in plans().items() if k not in seen}
+    assert new
+    bad = [k for k, v in new.items() if "SinglePartition" in v]
+    assert not bad, new[bad[0]]

@@ -48,6 +48,7 @@ def main():
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
 
     import __spark_entry__ as entrymod
+    from ocr_to_csv_spark import scratch
     from ocr_to_csv_spark.session import get_spark
 
     spark = get_spark("check_queries")
@@ -65,7 +66,8 @@ def main():
             continue
         t0 = time.time()
         try:
-            got = fn(spark, sf_dir).toPandas()
+            with scratch.scope():  # staged state dies once consumed here
+                got = fn(spark, sf_dir).toPandas()
         except Exception as e:
             failures.append(name)
             results[name] = {"status": "fail", "err": f"spark: {e}"}
