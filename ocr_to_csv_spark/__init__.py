@@ -4,16 +4,21 @@ Re-expresses the capabilities of the reference desktop tool rad10/OCR-to-CSV
 (see /root/reference, SURVEY.md) as an idiomatic Spark pipeline over tables of
 interleaved text+media documents:
 
+- ``datagen``    deterministic synthetic corpus generator (FIXTURES.md).
+- ``sources``    span sources and decoders (PDF, archives, WARC, codecs).
 - ``imaging``    pure-numpy image ops (binarize / morphology / connected
                  components / table-grid recovery) — the native OCR path.
 - ``extraction`` HTML boilerplate strip + table harvest, OCR lattices,
                  dictionary matchers, and the end-to-end DataFrame pipeline.
-- ``relational`` the relational operator catalog exercised against TPC-H-ish
-                 testdata (driver correctness contract).
-- ``ops``        large-scale training-data pipeline operators (dedup,
-                 similarity search, text analysis, multimodal plumbing).
-- ``state``      resumable run_state checkpointing with per-partition lineage.
-- ``datagen``    deterministic synthetic corpus generator (FIXTURES.md).
+- ``plans``      resumable checkpointed runs, iterative resume, training-set
+                 jobs and other multi-stage plans over the pipeline.
+- ``streaming``  Structured Streaming ingest, dedup, sketches and windows.
+- ``functions``  the query library: every module defining ``QUERIES`` and
+                 ``ORACLES`` (Spark plan + DuckDB oracle); iterative queries
+                 run on ``functions.util.superstep``.
+- ``scratch``    the only owner of scratch parquet dirs (``path``, ``stage``,
+                 ``scope``).
+- ``session``    the SparkSession factory with the engine's defaults.
 
 Everything DataFrame-first: vectorized pandas/Arrow UDFs only, never
 per-row Python UDFs; no RDDs in the hot path.

@@ -9,9 +9,8 @@ Scale design (100 TB):
   quadratic dominance join — sort by spend, then "dominated" =
   (max cnt over the strictly-greater-spend RANGE frame ≥ cnt) OR
   (max cnt among equal spend > cnt): two window functions, O(n log n)
-  per layer. K=4 peels with localCheckpoint between rounds (the
-  suffix_rank lineage discipline). Output = layered points, bounded
-  by the front sizes.
+  per layer. K=4 peels, one ``util.superstep`` round each. Output =
+  layered points, bounded by the front sizes.
 - ``adaboost_stumps``: the 40-stump panel (2 features × 10 literal
   thresholds × 2 directions) is evaluated by ONE conditional
   aggregate (panel-as-columns — the brier_decomp pivot); round-1
@@ -33,12 +32,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import scratch
 from .textops import QC_BIAS, QC_BUCKETS, _qc_weight
 from .util import (
     DUCK_HEX32,
     DUCK_TOKENS,
     hex32,
+    superstep,
     table,
     tokens,
 )
@@ -61,11 +60,8 @@ def _profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pareto_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customers in the first PL_LAYERS Pareto fronts of (spend, cnt)
     maximization (module doc): (custkey, spend, cnt, layer)."""
-    remaining = _profiles(spark, sf_dir)
-    outs = []
-    for layer in range(1, PL_LAYERS + 1):
-        # scratch staging, not localCheckpoint: see scratch.stage
-        remaining = scratch.stage(remaining)
+
+    def peel(state, layer):
         # suffix max over strictly-greater spend as a RUNNING max in
         # descending order: a (1, unboundedFollowing) frame makes Spark
         # rescan the remaining frame per row — O(n^2) per layer
@@ -76,25 +72,22 @@ def q_pareto_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
             .rangeBetween(Window.unboundedPreceding, -1)
         )
         wsame = Window.partitionBy("spend")
-        marked = remaining.withColumn(
-            "dominated",
-            (F.coalesce(F.max("cnt").over(wafter), F.lit(-1))
-             >= F.col("cnt"))
-            | (F.max("cnt").over(wsame) > F.col("cnt")),
+        dominated = (
+            F.coalesce(F.max("cnt").over(wafter), F.lit(-1)) >= F.col("cnt")
+        ) | (F.max("cnt").over(wsame) > F.col("cnt"))
+        marked = state.filter(F.col("layer").isNull()).select(
+            "custkey", "spend", "cnt",
+            F.when(~dominated, F.lit(layer)).cast("long").alias("layer"),
         )
-        outs.append(
-            marked.filter(~F.col("dominated")).select(
-                "custkey", "spend", "cnt",
-                F.lit(layer).cast("long").alias("layer"),
-            )
-        )
-        remaining = marked.filter(F.col("dominated")).select(
-            "custkey", "spend", "cnt"
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out.orderBy("layer", "custkey")
+        return state.filter(F.col("layer").isNotNull()).unionByName(marked)
+
+    # state: every customer, layer NULL until its front is peeled
+    state, _ = superstep(
+        _profiles(spark, sf_dir).withColumn("layer", F.lit(None).cast("long")),
+        peel,
+        PL_LAYERS,
+    )
+    return state.filter(F.col("layer").isNotNull()).orderBy("layer", "custkey")
 
 
 def _panel() -> list[tuple[str, int, int]]:

@@ -17,8 +17,8 @@ Scale design (100 TB):
   equi-join + one (seed, node) sum-aggregate, gated by the dist table
   so only SHORTEST-DAG edges contribute. Reverse phase: R(s,v) =
   1 + Σ_{v→w in DAG} R(s,w) walks levels H−1..0 the same way. Each
-  superstep is join + keyed agg; ``localCheckpoint`` truncates
-  lineage (the graphstats2/boruvka discipline).
+  superstep is join + keyed agg, one ``util.superstep`` round (the
+  graphstats2 BFS on the symmetric edge set).
 - ``sp_counts``: the forward phase standalone — (seed, node, dist, σ),
   all exact int64 (out-degree ≤ 3 and H = 5 bound σ far below
   overflow).
@@ -41,7 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .graphstats2 import H_ROUNDS, SEED_MOD, _graph
+from .graphstats2 import H_ROUNDS, SEED_MOD, _bfs_state, _graph
+from .util import superstep
 
 
 def _dedges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -54,41 +55,17 @@ def _dedges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
 
 
-def _bfs_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sparse (seed, id, dist) over the symmetric graph — the
-    graphstats2 superstep loop on the undirected edge set."""
-    nodes, _ = _graph(spark, sf_dir)
-    edges = _dedges(spark, sf_dir)
-    state = nodes.filter(F.col("id") % SEED_MOD == 0).select(
-        F.col("id").alias("seed"),
-        F.col("id"),
-        F.lit(0).cast("long").alias("dist"),
-    )
-    for _ in range(H_ROUNDS):
-        relax = (
-            edges.join(state.withColumnRenamed("id", "src"), "src")
-            .select("seed", F.col("dst").alias("id"),
-                    (F.col("dist") + 1).alias("dist"))
-        )
-        state = (
-            state.unionByName(relax)
-            .groupBy("seed", "id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-    return state
+def _sigma(edges: DataFrame, dist: DataFrame) -> DataFrame:
+    """(seed, id, dist, sigma): exact shortest-path counts by level.
+    The state accumulates every level; round k reads level k − 1."""
 
-
-def _sigma(spark: SparkSession, sf_dir: str, dist: DataFrame) -> DataFrame:
-    """(seed, id, dist, sigma): exact shortest-path counts by level."""
-    edges = _dedges(spark, sf_dir)
-    level = dist.filter(F.col("dist") == 0).select(
-        "seed", "id", F.lit(1).cast("long").alias("sigma")
-    )
-    acc = [level.withColumn("dist", F.lit(0).cast("long"))]
-    for k in range(1, H_ROUNDS + 1):
+    def level(acc, k):
         nxt = (
-            edges.join(level.withColumnRenamed("id", "src"), "src")
+            edges.join(
+                acc.filter(F.col("dist") == k - 1)
+                .select("seed", F.col("id").alias("src"), "sigma"),
+                "src",
+            )
             .select("seed", F.col("dst").alias("id"), "sigma")
             .join(
                 dist.filter(F.col("dist") == k).select("seed", "id"),
@@ -96,20 +73,24 @@ def _sigma(spark: SparkSession, sf_dir: str, dist: DataFrame) -> DataFrame:
             )
             .groupBy("seed", "id")
             .agg(F.sum("sigma").alias("sigma"))
-            .localCheckpoint(eager=False)
         )
-        acc.append(nxt.withColumn("dist", F.lit(k).cast("long")))
-        level = nxt
-    out = acc[0]
-    for a in acc[1:]:
-        out = out.unionByName(a)
+        return acc.unionByName(nxt.withColumn("dist", F.lit(k).cast("long")))
+
+    out, _ = superstep(
+        dist.filter(F.col("dist") == 0).select(
+            "seed", "id", F.lit(1).cast("long").alias("sigma"),
+            F.lit(0).cast("long").alias("dist"),
+        ),
+        level,
+        H_ROUNDS,
+    )
     return out
 
 
 def q_sp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """σ(s, v) within the H-hop horizon (module doc)."""
-    dist = _bfs_state(spark, sf_dir).localCheckpoint(eager=False)
-    return _sigma(spark, sf_dir, dist).select(
+    edges, dist = _bfs_state(_graph(spark, sf_dir)[0], _dedges(spark, sf_dir))
+    return _sigma(edges, dist).select(
         "seed",
         "id",
         F.col("dist").cast("long").alias("dist"),
@@ -119,16 +100,18 @@ def q_sp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_stress_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """stress(v) = Σ_s σ(s,v)·(R(s,v)−1), v ≠ s (module doc)."""
-    dist = _bfs_state(spark, sf_dir).localCheckpoint(eager=False)
-    edges = _dedges(spark, sf_dir)
-    sigma = _sigma(spark, sf_dir, dist)
-    rk = dist.filter(F.col("dist") == H_ROUNDS).select(
-        "seed", "id", F.lit(1).cast("long").alias("r")
-    )
-    rs = [rk]
-    for k in range(H_ROUNDS - 1, -1, -1):
+    edges, dist = _bfs_state(_graph(spark, sf_dir)[0], _dedges(spark, sf_dir))
+    sigma = _sigma(edges, dist)
+
+    def level(acc, r):
+        # round r fills level k = H − r from level k + 1
+        k = H_ROUNDS - r
         contrib = (
-            edges.join(rk.withColumnRenamed("id", "dst"), "dst")
+            edges.join(
+                acc.filter(F.col("dist") == k + 1)
+                .select("seed", F.col("id").alias("dst"), "r"),
+                "dst",
+            )
             .groupBy("seed", "src")
             .agg(F.sum("r").alias("succ_r"))
             .withColumnRenamed("src", "id")
@@ -143,16 +126,21 @@ def q_stress_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.lit(1) + F.coalesce("succ_r", F.lit(0)))
                 .cast("long")
                 .alias("r"),
+                F.lit(k).cast("long").alias("dist"),
             )
-            .localCheckpoint(eager=False)
         )
-        rs.append(rk)
-    r = rs[0]
-    for x in rs[1:]:
-        r = r.unionByName(x)
+        return acc.unionByName(rk)
+
+    r, _ = superstep(
+        dist.filter(F.col("dist") == H_ROUNDS).select(
+            "seed", "id", F.lit(1).cast("long").alias("r"), "dist"
+        ),
+        level,
+        H_ROUNDS,
+    )
     return (
         sigma.filter(F.col("dist") >= 1)
-        .join(r, ["seed", "id"])
+        .join(r.drop("dist"), ["seed", "id"])
         .groupBy("id")
         .agg(
             F.sum(F.col("sigma") * (F.col("r") - 1)).alias("stress"),

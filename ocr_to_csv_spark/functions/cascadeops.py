@@ -16,8 +16,8 @@ Scale design (100 TB):
   (hex32('m|lo|hi'), lo, hi); per round an edge joins the matching iff
   its priority is the strict minimum among live edges at BOTH
   endpoints — two keyed min-aggs + one join per round, matched
-  endpoints drop by left_anti, ``localCheckpoint`` truncates lineage,
-  loop ends when no live edge remains. The parallel local-min
+  endpoints drop by left_anti, one ``util.superstep`` round each, and
+  the loop ends when no live edge remains. The parallel local-min
   iteration provably equals the SEQUENTIAL greedy matching in priority
   order (the luby_mis argument on the line graph), so the independent
   pure-python greedy is the golden oracle (misops staged-gold
@@ -36,12 +36,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .graphtext import _edges
-from .linkpred import _EDGES_SQL, _undirected_edges
-from .util import gold_tag, DUCK_HEX32, hex32, table
+from .linkpred import _EDGES_SQL, _py_undirected_edges, _undirected_edges
+from .util import gold_tag, DUCK_HEX32, hex32, superstep, table
 
 CASCADE_R = 3  # propagation rounds
 SEED_MOD = 97  # id % SEED_MOD == 0 seeds the cascade
-MATCH_ROUNDS = 24  # safety cap; the loop exits when no live edge remains
+MATCH_ROUNDS = 24  # fixpoint guard; the loop exits when no live edge remains
 
 
 def q_cascade_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -55,9 +55,8 @@ def q_cascade_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
         "theta"
     )
     thresh = nodes.select("id", th)
-    active = nodes.filter(F.col("id") % SEED_MOD == 0).select("id")
-    counts = [(0, active.count(), active.count())]
-    for r in range(1, CASCADE_R + 1):
+
+    def spread(active, _r):
         influenced = (
             edges.join(active.withColumnRenamed("id", "src"), "src")
             .groupBy(F.col("dst").alias("id"))
@@ -69,9 +68,19 @@ def q_cascade_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("id")
             .join(active, "id", "left_anti")
         )
-        active = active.unionByName(newly).localCheckpoint()
-        n_act = active.count()
-        counts.append((r, n_act, n_act - counts[-1][1]))
+        return active.unionByName(newly)
+
+    _, hist = superstep(
+        nodes.filter(F.col("id") % SEED_MOD == 0).select("id"),
+        spread,
+        CASCADE_R,
+        metrics={"n": F.count(F.lit(1))},
+    )
+    n_act = [h["n"] for h in hist]
+    counts = [
+        (r, n_act[r], n_act[r] - (n_act[r - 1] if r else 0))
+        for r in range(len(n_act))
+    ]
     return spark.createDataFrame(
         counts, "round long, n_active long, n_new long"
     ).orderBy("round")
@@ -132,11 +141,9 @@ def q_greedy_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("hi").cast("string"),
         )
     )
-    live = ue.select("lo", "hi", h.alias("h")).localCheckpoint()
-    matched: DataFrame | None = None
-    for _ in range(MATCH_ROUNDS):
-        if live.isEmpty():
-            break
+
+    def match(state, _r):
+        live = state.filter(~F.col("matched"))
         pr = F.struct("h", "lo", "hi")
         ends = live.select(F.col("lo").alias("node"), pr.alias("p")).unionByName(
             live.select(F.col("hi").alias("node"), pr.alias("p"))
@@ -151,21 +158,26 @@ def q_greedy_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.struct("h", "lo", "hi") == F.col("pmin_lo"))
                 & (F.struct("h", "lo", "hi") == F.col("pmin_hi"))
             )
-            .select("lo", "hi")
-            .localCheckpoint()
+            .select("lo", "hi", "h", F.lit(True).alias("matched"))
         )
-        matched = wins if matched is None else matched.unionByName(wins)
         used = wins.select(F.col("lo").alias("node")).unionByName(
             wins.select(F.col("hi").alias("node"))
         )
-        live = (
+        rest = (
             live.join(used.withColumnRenamed("node", "lo"), "lo", "left_anti")
             .join(used.withColumnRenamed("node", "hi"), "hi", "left_anti")
-            .select("lo", "hi", "h")
-            .localCheckpoint()
+            .select("lo", "hi", "h", "matched")
         )
-    assert matched is not None
-    return matched.select(
+        return state.filter(F.col("matched")).unionByName(wins).unionByName(rest)
+
+    state, _ = superstep(
+        ue.select("lo", "hi", h.alias("h"), F.lit(False).alias("matched")),
+        match,
+        MATCH_ROUNDS,
+        metrics={"live": F.sum((~F.col("matched")).cast("long"))},
+        done=lambda hist: not hist[-1]["live"],
+    )
+    return state.filter(F.col("matched")).select(
         F.col("lo").cast("long").alias("lo"), F.col("hi").cast("long").alias("hi")
     ).orderBy("lo", "hi")
 
@@ -173,30 +185,9 @@ def q_greedy_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _py_greedy_matching(sf_dir: str) -> list[tuple[int, int]]:
     """Sequential greedy matching in (hash, lo, hi) priority order —
     fully independent recomputation from doc_ids."""
-    import glob
     import hashlib
 
-    import pandas as pd
-
-    files = sorted(glob.glob(f"{sf_dir}/documents.parquet")) or sorted(
-        glob.glob(f"{sf_dir}/documents.parquet/*.parquet")
-    )
-    ids = pd.concat(
-        [pd.read_parquet(f, columns=["doc_id"]) for f in files]
-    )["doc_id"].astype(int).tolist()
-    n = len(ids)
-    ue = set()
-    for i in ids:
-        raw = []
-        if i % 3 != 0:
-            raw.append((i * 2 + 1) % n)
-        if i % 2 == 0:
-            raw.append((i * 7 + 3) % n)
-        if i % 6 == 1:
-            raw.append((i + n // 2) % n)
-        for dst in raw:
-            if dst != i:
-                ue.add((min(i, dst), max(i, dst)))
+    ue = _py_undirected_edges(sf_dir)
 
     def h(lo, hi):
         return int(

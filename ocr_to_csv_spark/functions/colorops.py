@@ -12,9 +12,10 @@ Scale design (100 TB):
   coloring is safe), taking the mex of its already-colored neighbors'
   colors (a bounded in-row filter over sequence(0, deg)). Each round:
   one live-edge join + one keyed min + one colored-neighbor join +
-  one keyed mex — state shrinks monotonically, localCheckpoint per
-  round. Like luby_mis/greedy_matching, the oracle is a STAGED GOLDEN
-  computed by an independent sequential python implementation.
+  one keyed mex — the uncolored set shrinks monotonically, one
+  ``util.superstep`` round each. Like luby_mis/greedy_matching, the
+  oracle is a STAGED GOLDEN computed by an independent sequential
+  python implementation.
 - ``vertex_cover``: cover = both endpoints of the greedy maximal
   matching (cascadeops) — covers every edge (else the matching wasn't
   maximal) with |cover| = 2|M| ≤ 2·OPT (any cover needs ≥ one
@@ -34,9 +35,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .cascadeops import _staged_matching_gold, q_greedy_matching
-from .linkpred import _undirected_edges
+from .linkpred import _py_undirected_edges, _undirected_edges
 from .misops import _prio
-from .util import gold_tag
+from .util import gold_tag, superstep
 
 COLOR_ROUNDS = 60  # fixpoint guard; expected O(log n) rounds
 
@@ -50,12 +51,11 @@ def q_greedy_coloring(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(ue.select(F.col("hi").alias("a"), F.col("lo").alias("b")))
         .localCheckpoint()
     )
-    nodes = sym.select(F.col("a").alias("id")).distinct().localCheckpoint()
-    uncolored = nodes.select("id", _prio(F.col("id")).alias("prio"))
-    colors: DataFrame | None = None
-    for _ in range(COLOR_ROUNDS):
-        if uncolored.isEmpty():
-            break
+    nodes = sym.select(F.col("a").alias("id")).distinct()
+
+    def color_round(state, _r):
+        uncolored = state.filter(F.col("color").isNull())
+        colors = state.filter(F.col("color").isNotNull())
         live = sym.join(
             uncolored.select(F.col("id").alias("a")), "a"
         ).join(
@@ -68,49 +68,49 @@ def q_greedy_coloring(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).withColumn(
             "win", F.col("nmin").isNull() | (F.col("prio") < F.col("nmin"))
         )
-        winners = marked.filter("win").select("id")
-        if colors is None:
-            mexes = winners.withColumn("color", F.lit(0).cast("long"))
-        else:
-            ncol = (
-                winners.join(sym.withColumnRenamed("a", "id"), "id")
-                .join(
-                    colors.select(
-                        F.col("id").alias("b"), F.col("color").alias("nc")
-                    ),
-                    "b",
-                )
-                .groupBy("id")
-                .agg(F.collect_set("nc").alias("cs"))
-                .withColumn(
-                    "color",
-                    F.array_min(
-                        F.filter(
-                            F.sequence(
-                                F.lit(0).cast("long"),
-                                F.size("cs").cast("long"),
-                            ),
-                            lambda k: ~F.array_contains(F.col("cs"), k),
-                        )
-                    ),
-                )
-                .select("id", "color")
+        winners = marked.filter("win").select("id", "prio")
+        # mex of the colored neighbors' colors (0 when none is colored)
+        ncol = (
+            winners.join(sym.withColumnRenamed("a", "id"), "id")
+            .join(
+                colors.select(F.col("id").alias("b"), F.col("color").alias("nc")),
+                "b",
             )
-            mexes = (
-                winners.join(ncol, "id", "left")
-                .select(
-                    "id",
-                    F.coalesce("color", F.lit(0)).cast("long").alias("color"),
-                )
+            .groupBy("id")
+            .agg(F.collect_set("nc").alias("cs"))
+            .withColumn(
+                "color",
+                F.array_min(
+                    F.filter(
+                        F.sequence(
+                            F.lit(0).cast("long"),
+                            F.size("cs").cast("long"),
+                        ),
+                        lambda k: ~F.array_contains(F.col("cs"), k),
+                    )
+                ),
             )
-        colors = (
-            mexes if colors is None else colors.unionByName(mexes)
-        ).localCheckpoint()
-        uncolored = (
-            marked.filter(~F.col("win")).select("id", "prio").localCheckpoint()
+            .select("id", "color")
         )
-    assert colors is not None
-    return colors.select(
+        mexes = winners.join(ncol, "id", "left").select(
+            "id", "prio", F.coalesce("color", F.lit(0)).cast("long").alias("color")
+        )
+        return (
+            colors.unionByName(mexes)
+            .unionByName(marked.filter(~F.col("win")).select("id", "prio", "color"))
+        )
+
+    state, _ = superstep(
+        nodes.select(
+            "id", _prio(F.col("id")).alias("prio"),
+            F.lit(None).cast("long").alias("color"),
+        ),
+        color_round,
+        COLOR_ROUNDS,
+        metrics={"left": F.sum(F.col("color").isNull().cast("long"))},
+        done=lambda h: not h[-1]["left"],
+    )
+    return state.select(
         F.col("id").cast("long").alias("id"), F.col("color")
     ).orderBy("id")
 
@@ -143,35 +143,10 @@ def q_vertex_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _py_jones_plassmann(sf_dir: str) -> list[tuple[int, int]]:
     """Independent sequential simulation of the SAME JP rounds."""
-    import glob
-    import hashlib  # noqa: F401  (parity with sibling goldens)
-
-    import pandas as pd
-
-    files = sorted(glob.glob(f"{sf_dir}/documents.parquet")) or sorted(
-        glob.glob(f"{sf_dir}/documents.parquet/*.parquet")
-    )
-    ids = (
-        pd.concat([pd.read_parquet(f, columns=["doc_id"]) for f in files])[
-            "doc_id"
-        ]
-        .astype(int)
-        .tolist()
-    )
-    n = len(ids)
     nbrs: dict[int, set[int]] = {}
-    for i in ids:
-        raw = []
-        if i % 3 != 0:
-            raw.append((i * 2 + 1) % n)
-        if i % 2 == 0:
-            raw.append((i * 7 + 3) % n)
-        if i % 6 == 1:
-            raw.append((i + n // 2) % n)
-        for dst in raw:
-            if dst != i:
-                nbrs.setdefault(i, set()).add(dst)
-                nbrs.setdefault(dst, set()).add(i)
+    for a, b in _py_undirected_edges(sf_dir):
+        nbrs.setdefault(a, set()).add(b)
+        nbrs.setdefault(b, set()).add(a)
 
     def prio(v):
         return ((v * 2654435761) % 2147483648) * 4294967296 + v

@@ -10,8 +10,8 @@ multi-parent DAG of depth ≤ ~log₂ n, roots {0, 1}.
 
 Scale design (100 TB):
 - ``dag_levels`` is Pregel-shaped max-propagation: per round one
-  keyed equi-join (edges ⋈ levels) + one max-aggregate, with
-  ``localCheckpoint`` lineage truncation and an early exit when the
+  keyed equi-join (edges ⋈ levels) + one max-aggregate, one
+  ``util.superstep`` round each, and an early exit when the observed
   level sum reaches fixpoint — O(depth) rounds, each a linear shuffle;
   nothing node-sized ever reaches the driver. The DuckDB oracle walks
   every root path with a RECURSIVE CTE and takes max depth — the
@@ -33,9 +33,9 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .util import table
+from .util import superstep, table
 
-MAX_ROUNDS = 14  # ≥ DAG depth at any tested sf (depth ~ log2 n)
+MAX_ROUNDS = 14  # fixpoint guard; ≥ DAG depth at any tested sf (depth ~ log2 n)
 
 
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -59,23 +59,26 @@ def q_dag_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").alias("node")
     )
     edges = _edges(spark, sf_dir).localCheckpoint()
-    lvl = nodes.select("node", F.lit(0).alias("lvl")).localCheckpoint()
-    prev_sum = -1
-    for _ in range(MAX_ROUNDS):
-        cur_sum = lvl.agg(F.sum("lvl")).collect()[0][0]
-        if cur_sum == prev_sum:
-            break  # fixpoint: no level grew last round
-        prev_sum = cur_sum
+
+    def relax(lvl, _r):
         upd = (
             edges.join(lvl, edges.par == lvl.node)
             .groupBy("child")
             .agg((F.max("lvl") + 1).alias("cand"))
         )
-        lvl = (
-            nodes.join(upd, nodes.node == upd.child, "left")
-            .select("node", F.coalesce("cand", F.lit(0)).alias("lvl"))
-            .localCheckpoint()
+        return nodes.join(upd, nodes.node == upd.child, "left").select(
+            "node", F.coalesce("cand", F.lit(0)).alias("lvl")
         )
+
+    # levels only grow (longest path), so an unchanged level sum is the
+    # fixpoint
+    lvl, _ = superstep(
+        nodes.select("node", F.lit(0).alias("lvl")),
+        relax,
+        MAX_ROUNDS,
+        metrics={"s": F.sum("lvl")},
+        done=lambda h: len(h) > 1 and h[-1]["s"] == h[-2]["s"],
+    )
     return lvl
 
 

@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import scratch
-from .util import DUCK_HEX32, global_seq, hex32, table
+from .util import DUCK_HEX32, global_seq, hash_min_fixpoint, hex32, table
 
 N_SEEDS = 8  # minhash permutations
 N_BANDS = 4  # LSH bands of 2 rows each
@@ -292,51 +292,29 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep their own id). This is the step that turns pairwise candidates
     into the actual drop-set of a dedup pipeline.
 
-    Scale design: iterative min-label propagation (the MapReduce CC
-    recipe of Kiveris et al., simplified to one-hop min propagation —
-    near-dup components have tiny diameters, so it converges in a
-    handful of rounds). Each round is one shuffle on node id;
-    ``localCheckpoint`` truncates lineage so round N's plan doesn't
-    re-run rounds 1..N-1, and the edge list is materialized once instead
-    of re-running the MinHash job per round. Convergence is an exact
-    fixpoint check (changed-label count == 0), so results are
-    deterministic and oracle-checkable (DuckDB recursive CTE)."""
+    Scale design: ``util.hash_min_fixpoint`` over the symmetric
+    candidate-pair graph (hash-min with pointer jumping, the
+    boruvka_msf contraction loop) — near-dup components have tiny
+    diameters, so it converges in a handful of sweeps. The edge list is
+    materialized once instead of re-running the MinHash job per sweep.
+    Convergence is an exact fixpoint check (changed-label count == 0),
+    so results are deterministic and oracle-checkable (DuckDB recursive
+    CTE)."""
     docs = table(spark, sf_dir, "documents").select("doc_id")
     pairs = q_lsh_pairs(spark, sf_dir)
     edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
         .unionByName(
-            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
+            pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
         )
         .localCheckpoint()
     )
-    labels = docs.select("doc_id", F.col("doc_id").alias("cluster_id")).localCheckpoint()
-    for _ in range(50):  # diameter bound; near-dup graphs converge in ~2-3
-        nbr = (
-            edges.join(labels, edges["src"] == labels["doc_id"])
-            .groupBy(edges["dst"].alias("doc_id"))
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(nbr, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("cluster_id"), F.coalesce("nbr_min", F.col("cluster_id"))
-                ).alias("cluster_id"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            return labels
-    raise RuntimeError("dedup_clusters: no fixpoint in 50 rounds")
+    labels = docs.select(F.col("doc_id").alias("cid"), F.col("doc_id").alias("lbl"))
+    # fixpoint guard: near-dup graphs converge in ~2-3 sweeps
+    labels = hash_min_fixpoint(edges, labels, 50)
+    return labels.select(
+        F.col("cid").alias("doc_id"), F.col("lbl").alias("cluster_id")
+    )
 
 
 def q_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:

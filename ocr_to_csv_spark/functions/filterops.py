@@ -10,7 +10,7 @@ Scale design (100 TB):
   m = ⌊1.40n⌋+1) peels by rounds: a cell with exactly ONE incident
   key releases that key. Each round = ONE (cell) keyed count + ONE
   semi-join back to the live keys — the connected-components round
-  shape, localCheckpoint per round, K=12 rounds (peeling completes in
+  shape, one ``util.superstep`` round each, K=12 rounds (peeling completes in
   O(log n) rounds whp at this load). c*≈1.23 is the ASYMPTOTIC
   peelability threshold; at the small n of the test corpora the 2-core
   fluctuations bite, so this build uses the slack tier c = 1.40
@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .util import DUCK_HEX32, hex32, table
+from .util import DUCK_HEX32, hex32, superstep, table
 
 PEEL_ROUNDS = 12
 PEEL_C_MILLI = 1400  # m = floor(1.40 n) + 1 (see module doc)
@@ -68,8 +68,8 @@ def q_xor_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys = c.select(F.col("c_custkey").cast("long").alias("key"))
     n = keys.count()
     m = (n * PEEL_C_MILLI) // 1000 + 1
-    live = keys.localCheckpoint(eager=True)
-    for _ in range(PEEL_ROUNDS):
+
+    def peel(live, _r):
         kc = _key_cells(live, F.lit(m))
         singles = (
             kc.groupBy("cell")
@@ -78,10 +78,12 @@ def q_xor_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("cell")
         )
         peeled = kc.join(singles, "cell").select("key").distinct()
-        live = live.join(peeled, "key", "left_anti").localCheckpoint(
-            eager=True
-        )
-    n_rem = live.count()
+        return live.join(peeled, "key", "left_anti")
+
+    _, hist = superstep(
+        keys, peel, PEEL_ROUNDS, metrics={"n": F.count(F.lit(1))}
+    )
+    n_rem = hist[-1]["n"]
     return spark.createDataFrame(
         [(n, m, n - n_rem, int(n_rem == 0))],
         "n_keys long, m_cells long, n_peeled long, success long",

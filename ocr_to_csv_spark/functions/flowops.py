@@ -21,11 +21,10 @@ Scale design (100 TB):
   over the SYMMETRIZED distinct edge set; state = distinct
   (seed, node, parity) triples, each round ONE frontier⋈edges
   equi-join + distinct union (state is seeds×nodes×2-bounded, the
-  anf_reach discipline), localCheckpoint per round against lineage
-  blowup. A node reached on both parities from the same seed
-  witnesses an odd closed walk through that seed's ball — the exact
-  non-bipartiteness certificate; conflict counts per seed are the
-  output.
+  anf_reach discipline), one ``util.superstep`` round each. A node
+  reached on both parities from the same seed witnesses an odd closed
+  walk through that seed's ball — the exact non-bipartiteness
+  certificate; conflict counts per seed are the output.
 
 Reference parity: no scheduling/graph layer in the reference; extends
 lpt_makespan/critical_path (schedops) and ball2_size/bfs_dist
@@ -37,8 +36,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import scratch
 from .graphtext import _edges
-from .util import table
+from .util import superstep, table
 
 FS_JOBS = 32
 BP_ROUNDS = 6
@@ -117,27 +117,29 @@ def q_bipartite_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = d.count()
     nodes = d.select(F.col("doc_id").cast("long").alias("id"))
     e = _edges(nodes, n)
-    sym = (
+    sym = scratch.stage(  # read by every round
         e.select("src", "dst")
         .unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
     )
-    state = nodes.filter(F.col("id") % BP_SEED_MOD == 0).select(
-        F.col("id").alias("seed"),
-        F.col("id").alias("node"),
-        F.lit(0).cast("long").alias("parity"),
-    )
-    for _ in range(BP_ROUNDS):
-        state = state.localCheckpoint(eager=True)
-        step = (
-            state.join(sym.withColumnRenamed("src", "node"), "node")
-            .select(
-                "seed",
-                F.col("dst").alias("node"),
-                (F.lit(1) - F.col("parity")).alias("parity"),
-            )
+
+    def expand(state, _r):
+        step = state.join(sym.withColumnRenamed("src", "node"), "node").select(
+            "seed",
+            F.col("dst").alias("node"),
+            (F.lit(1) - F.col("parity")).alias("parity"),
         )
-        state = state.unionByName(step).distinct()
+        return state.unionByName(step).distinct()
+
+    state, _ = superstep(
+        nodes.filter(F.col("id") % BP_SEED_MOD == 0).select(
+            F.col("id").alias("seed"),
+            F.col("id").alias("node"),
+            F.lit(0).cast("long").alias("parity"),
+        ),
+        expand,
+        BP_ROUNDS,
+    )
     per_node = state.groupBy("seed", "node").agg(
         F.count(F.lit(1)).alias("np")
     )

@@ -13,7 +13,7 @@ Scale design (100 TB):
   SHRINKS, so per-round cost is monotone non-increasing; the wedge
   join is degree-bounded (the synthesized graph has deg ≤ 6;
   production caps hubs first — the ``triangles``/``common_neighbors``
-  mitigation). ``localCheckpoint`` truncates per-round lineage. The
+  mitigation). Each round is one ``util.superstep`` staging write. The
   k-truss is the unique maximal subgraph with that property, so the
   fixpoint is order-independent — golden-oracled by an independent
   pure-Python peeler (the ``boruvka_msf`` pattern).
@@ -39,10 +39,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .linkpred import _EDGES_SQL, _undirected_edges
-from .util import gold_tag
+from .linkpred import _EDGES_SQL, _py_undirected_edges, _undirected_edges
+from .util import gold_tag, superstep
 
 K_TRUSS = 4  # edges must sit in ≥ 2 triangles of the survivor graph
+TRUSS_ROUNDS = 64  # fixpoint guard; each round peels ≥ 1 edge or stops
 N_PARTS = 8  # hash-sharding fan-out under audit
 
 # The bare modular graph is too sparse for a 4-truss (its 4-truss is
@@ -112,25 +113,33 @@ def q_k_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K_TRUSS-truss of the modular link graph: peel edges with
     support < K-2 until none drop; emit surviving (lo, hi, support)
     with support measured IN the fixpoint subgraph (module doc)."""
-    edges = _truss_edges(spark, sf_dir).localCheckpoint()
-    n_edges = edges.count()
-    while True:
-        sup = _support(edges)
-        keep = sup.filter(F.col("support") >= K_TRUSS - 2).localCheckpoint()
-        n_keep = keep.count()
-        if n_keep == n_edges:
-            return keep.select(
-                F.col("lo").cast("long").alias("lo"),
-                F.col("hi").cast("long").alias("hi"),
-                F.col("support").cast("long").alias("support"),
-            ).orderBy("lo", "hi")
-        edges = keep.select("lo", "hi")
-        n_edges = n_keep
+
+    def peel(state, _r):
+        return _support(state.select("lo", "hi")).filter(
+            F.col("support") >= K_TRUSS - 2
+        )
+
+    # the edge set only shrinks, so an unchanged edge count is the
+    # fixpoint, and the last round's support is measured in it
+    keep, _ = superstep(
+        _truss_edges(spark, sf_dir).withColumn(
+            "support", F.lit(None).cast("long")
+        ),
+        peel,
+        TRUSS_ROUNDS,
+        metrics={"n": F.count(F.lit(1))},
+        done=lambda h: len(h) > 1 and h[-1]["n"] == h[-2]["n"],
+    )
+    return keep.select(
+        F.col("lo").cast("long").alias("lo"),
+        F.col("hi").cast("long").alias("hi"),
+        F.col("support").cast("long").alias("support"),
+    ).orderBy("lo", "hi")
 
 
 def _py_truss_edges(sf_dir: str) -> set[tuple[int, int]]:
     """Independent rebuild of the augmented truss graph."""
-    pairs = set(_py_edges(sf_dir))
+    pairs = _py_undirected_edges(sf_dir)
     for a in range(CLIQUE_IDS):
         for o in (1, 2, 3, 4):
             b = a + o
@@ -141,34 +150,6 @@ def _py_truss_edges(sf_dir: str) -> set[tuple[int, int]]:
             b = a + o
             if b < STRIP_HI:
                 pairs.add((a, b))
-    return pairs
-
-
-def _py_edges(sf_dir: str) -> set[tuple[int, int]]:
-    """Independent pure-Python rebuild of the modular link graph."""
-    import glob
-
-    import pandas as pd
-
-    files = sorted(glob.glob(f"{sf_dir}/documents.parquet")) or sorted(
-        glob.glob(f"{sf_dir}/documents.parquet/*.parquet")
-    )
-    ids = pd.concat(
-        [pd.read_parquet(f, columns=["doc_id"]) for f in files]
-    )["doc_id"].astype(int).tolist()
-    n = len(ids)
-    pairs: set[tuple[int, int]] = set()
-    for i in ids:
-        raw = []
-        if i % 3 != 0:
-            raw.append((i, (i * 2 + 1) % n))
-        if i % 2 == 0:
-            raw.append((i, (i * 7 + 3) % n))
-        if i % 6 == 1:
-            raw.append((i, (i + n // 2) % n))
-        for a, b in raw:
-            if a != b:
-                pairs.add((min(a, b), max(a, b)))
     return pairs
 
 

@@ -12,8 +12,8 @@ Scale design (100 TB):
   node-sized on the driver. Each of the H supersteps is ONE keyed
   equi-join (edges ⋈ frontier on src) + ONE (seed, node) min-aggregate
   over the union with the previous state — the bfs_dist Pregel idiom
-  generalized to multi-source by widening the key; ``localCheckpoint``
-  truncates lineage each round (the scc/boruvka discipline).
+  generalized to multi-source by widening the key; each round is one
+  ``util.superstep`` staging write.
 - ``closeness_centrality``: per seed, H-hop reach count, exact integer
   distance sum, eccentricity-within-horizon; closeness = (n−1)/Σd is
   left as the exact (num, den) integer pair — no division crosses the
@@ -36,7 +36,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .util import table
+from .. import scratch
+from .graphtext import _edges
+from .util import superstep, table
 
 H_ROUNDS = 5  # BFS horizon (documented exact-within-horizon semantics)
 SEED_MOD = 53  # seeds = ids divisible by this
@@ -48,46 +50,42 @@ def _graph(spark: SparkSession, sf_dir: str):
     d = table(spark, sf_dir, "documents", spread=True)
     n = d.count()
     nodes = d.select(F.col("doc_id").cast("long").alias("id"))
-    i = F.col("id")
-    e1 = nodes.filter(i % 3 != 0).select(
-        i.alias("src"), ((i * 2 + 1) % n).alias("dst")
-    )
-    e2 = nodes.filter(i % 2 == 0).select(
-        i.alias("src"), ((i * 7 + 3) % n).alias("dst")
-    )
-    e3 = nodes.filter(i % 6 == 1).select(
-        i.alias("src"), ((i + n // 2) % n).alias("dst")
-    )
-    return nodes, e1.unionByName(e2).unionByName(e3)
+    return nodes, _edges(nodes, n)
 
 
-def _bfs_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sparse (seed, id, dist) table after H_ROUNDS supersteps."""
-    nodes, edges = _graph(spark, sf_dir)
-    state = nodes.filter(F.col("id") % SEED_MOD == 0).select(
-        F.col("id").alias("seed"),
-        F.col("id"),
-        F.lit(0).cast("long").alias("dist"),
-    )
-    for _ in range(H_ROUNDS):
-        relax = (
-            edges.join(state.withColumnRenamed("id", "src"), "src")
-            .select("seed", F.col("dst").alias("id"),
-                    (F.col("dist") + 1).alias("dist"))
+def _bfs_state(nodes: DataFrame, edges: DataFrame):
+    """Sparse (seed, id, dist) table after H_ROUNDS supersteps over
+    ``edges`` (src, dst) from the seeds among ``nodes``. Every round
+    reads the edges, so they are staged once; returns (staged edges,
+    state)."""
+    edges = scratch.stage(edges)
+
+    def relax(state, _r):
+        nxt = edges.join(state.withColumnRenamed("id", "src"), "src").select(
+            "seed", F.col("dst").alias("id"), (F.col("dist") + 1).alias("dist")
         )
-        state = (
-            state.unionByName(relax)
+        return (
+            state.unionByName(nxt)
             .groupBy("seed", "id")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
         )
-    return state
+
+    state, _ = superstep(
+        nodes.filter(F.col("id") % SEED_MOD == 0).select(
+            F.col("id").alias("seed"),
+            F.col("id"),
+            F.lit(0).cast("long").alias("dist"),
+        ),
+        relax,
+        H_ROUNDS,
+    )
+    return edges, state
 
 
 def q_closeness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per seed: H-hop reach, exact Σdist, eccentricity, and closeness
     as the exact integer pair ((n_reached−1), Σdist)."""
-    s = _bfs_state(spark, sf_dir)
+    s = _bfs_state(*_graph(spark, sf_dir))[1]
     return s.groupBy("seed").agg(
         F.count(F.lit(1)).alias("n_reached"),
         F.sum("dist").alias("sum_dist"),
@@ -102,7 +100,7 @@ def q_closeness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per seed: Σ 60/d over reached nodes (d ≥ 1) — exact int64
     fixed-point harmonic centrality."""
-    s = _bfs_state(spark, sf_dir).filter(F.col("dist") >= 1)
+    s = _bfs_state(*_graph(spark, sf_dir))[1].filter(F.col("dist") >= 1)
     return s.groupBy("seed").agg(
         F.sum(
             (F.lit(HARM_LCM).cast("long") / F.col("dist")).cast("long")

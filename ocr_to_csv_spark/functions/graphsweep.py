@@ -11,11 +11,11 @@ Scale design (100 TB):
   node (max dist, min id tie-break — one argmax aggregate); pass 2
   from u gives ecc(u) ≥ the true radius-based bound, and the reported
   lower bound diameter_lb = ecc(u) ≥ ecc(pivot). Each BFS superstep is
-  the bfs_dist Pregel idiom (edges ⋈ frontier + min-agg,
-  localCheckpoint); rounds = graph diameter (≤ ~20 here, O(log n)
-  on web graphs). Only NEW nodes stay in the frontier, so superstep
-  cost shrinks to zero at convergence — the loop exits when the
-  frontier empties, no fixed horizon.
+  the bfs_dist Pregel idiom (edges ⋈ frontier + min-agg, one
+  ``util.superstep`` round); rounds = graph diameter (≤ ~20 here,
+  O(log n) on web graphs). Only NEW nodes (dist = round − 1) form the
+  frontier, so the join shrinks to zero at convergence — the loop
+  exits when the frontier empties, no fixed horizon.
 - Output is one row of exact integers: pivot/u, both eccentricities,
   reach counts (= connected-component size seen from each), and the
   lower bound. The python mirror computes the TRUE diameter by
@@ -38,27 +38,40 @@ from pyspark.sql import functions as F
 
 from .brandesops import _dedges
 from .graphstats2 import _graph
+from .util import superstep
 
 PIVOT = 0  # deterministic first-sweep source
+BFS_ROUNDS = 64  # fixpoint guard; rounds = eccentricity + 1
 
 
 def _bfs_full(edges: DataFrame, src_df: DataFrame) -> DataFrame:
-    """(id, dist) exact BFS to fixpoint from the single-row src_df."""
-    state = src_df.select("id", F.lit(0).cast("long").alias("dist"))
-    frontier = state
-    while True:
+    """(id, dist) exact BFS to fixpoint from the single-row src_df.
+    Round r's frontier is the nodes first reached at dist r − 1."""
+
+    def expand(state, r):
         relax = (
-            edges.join(frontier.withColumnRenamed("id", "src"), "src")
+            edges.join(
+                state.filter(F.col("dist") == r - 1)
+                .select(F.col("id").alias("src"), "dist"),
+                "src",
+            )
             .select(F.col("dst").alias("id"), (F.col("dist") + 1).alias("dist"))
             .distinct()
         )
         new = relax.join(state, "id", "left_anti").groupBy("id").agg(
             F.min("dist").alias("dist")
-        ).localCheckpoint(eager=False)
-        if new.isEmpty():
-            return state
-        state = state.unionByName(new).localCheckpoint(eager=False)
-        frontier = new
+        )
+        return state.unionByName(new)
+
+    # the reached set only grows, so an unchanged count is the fixpoint
+    state, _ = superstep(
+        src_df.select("id", F.lit(0).cast("long").alias("dist")),
+        expand,
+        BFS_ROUNDS,
+        metrics={"n": F.count(F.lit(1))},
+        done=lambda h: len(h) > 1 and h[-1]["n"] == h[-2]["n"],
+    )
+    return state
 
 
 def q_diameter_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .util import DUCK_HEX32, DUCK_TOKENS, hex32, table, tokens
+from .util import DUCK_HEX32, DUCK_TOKENS, hex32, superstep, table, tokens
 
 HITS_ITERS = 3  # full hub→auth→hub rounds (values stay tiny in int64)
 LP_ROUNDS = 3  # synchronous label-propagation supersteps
@@ -498,78 +498,69 @@ def q_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per hop ONE keyed equi-join (edges x labels) + one
     min-aggregate — node/edge-sized distributed state, nothing
-    collects; ``localCheckpoint`` per outer round truncates the lineage
-    exactly as ``connected_components`` does. 2 * SCC_PROP joins per
+    collects; each outer round is one ``util.superstep`` staging write
+    of the node labels and the residual edge set. 2 * SCC_PROP joins per
     round x SCC_OUTER rounds; each assign-and-remove shrinks the edge
     set via two semi-joins."""
     d = table(spark, sf_dir, "documents", spread=True)
     n = d.count()
     nodes = d.select(F.col("doc_id").cast("long").alias("id"))
-    i = F.col("id")
-    e1 = nodes.filter(i % 3 != 0).select(i.alias("src"), ((i * 2 + 1) % n).alias("dst"))
-    e2 = nodes.filter(i % 2 == 0).select(i.alias("src"), ((i * 7 + 3) % n).alias("dst"))
-    e3 = nodes.filter(i % 6 == 1).select(i.alias("src"), ((i + n // 2) % n).alias("dst"))
-    edges = e1.unionByName(e2).unionByName(e3).localCheckpoint()
+    edges = _edges(nodes, n)
 
-    scc = nodes.select("id", F.lit(-1).cast("long").alias("scc")).localCheckpoint()
-    active = nodes.localCheckpoint()
-    E = edges
-
-    def _prop(lab: DataFrame, fwd: bool) -> DataFrame:
-        """SCC_PROP rounds of monotone min-label propagation."""
+    def _prop(E: DataFrame, lab: DataFrame, fwd: bool) -> DataFrame:
+        """SCC_PROP rounds of monotone min-label propagation over E:
+        f(u) pulls labels of out-neighbors (join on dst), b(u) of
+        in-neighbors (join on src)."""
+        near, far = ("dst", "src") if fwd else ("src", "dst")
         for _ in range(SCC_PROP):
-            if fwd:  # f(u) pulls labels of out-neighbors: join on dst
-                nb = (
-                    E.join(
-                        lab.select(
-                            F.col("id").alias("dst"), F.col("lab").alias("nlab")
-                        ),
-                        "dst",
-                    )
-                    .groupBy("src")
-                    .agg(F.min("nlab").alias("m"))
-                    .withColumnRenamed("src", "nid")
+            nb = (
+                E.join(
+                    lab.select(F.col("id").alias(near), F.col("lab").alias("nlab")),
+                    near,
                 )
-            else:  # b(u) pulls labels of in-neighbors: join on src
-                nb = (
-                    E.join(
-                        lab.select(
-                            F.col("id").alias("src"), F.col("lab").alias("nlab")
-                        ),
-                        "src",
-                    )
-                    .groupBy("dst")
-                    .agg(F.min("nlab").alias("m"))
-                    .withColumnRenamed("dst", "nid")
-                )
+                .groupBy(F.col(far).alias("nid"))
+                .agg(F.min("nlab").alias("m"))
+            )
             lab = lab.join(nb, lab.id == nb.nid, "left").select(
                 "id",
                 F.least(F.col("lab"), F.coalesce("m", F.lit(SCC_INF))).alias("lab"),
             )
         return lab
 
-    for _ in range(SCC_OUTER):
-        f = _prop(active.select("id", F.col("id").alias("lab")), fwd=True)
-        b = _prop(active.select("id", F.col("id").alias("lab")), fwd=False)
+    def outer(state, _r):
+        scc = state.filter(F.col("id").isNotNull()).select("id", "scc")
+        E = state.filter(F.col("src").isNotNull()).select("src", "dst")
+        active = scc.filter(F.col("scc") == -1).select("id")
+        f = _prop(E, active.select("id", F.col("id").alias("lab")), fwd=True)
+        b = _prop(E, active.select("id", F.col("id").alias("lab")), fwd=False)
         assigned = (
             f.join(b.select(F.col("id").alias("bid"), F.col("lab").alias("blab")),
                    f.id == F.col("bid"))
             .filter(F.col("lab") == F.col("blab"))
             .select("id", F.col("lab").alias("newscc"))
         )
-        scc = (
-            scc.join(assigned, "id", "left")
-            .select("id", F.coalesce("newscc", "scc").alias("scc"))
-            .localCheckpoint()
+        scc = scc.join(assigned, "id", "left").select(
+            "id", F.coalesce("newscc", "scc").alias("scc")
         )
-        active = active.join(assigned, "id", "left_anti").localCheckpoint()
+        left = scc.filter(F.col("scc") == -1).select("id")
         E = (
-            E.join(active.select(F.col("id").alias("src")), "src", "semi")
-            .join(active.select(F.col("id").alias("dst")), "dst", "semi")
-            .select("src", "dst")
-            .localCheckpoint()
+            E.join(left.select(F.col("id").alias("src")), "src", "semi")
+            .join(left.select(F.col("id").alias("dst")), "dst", "semi")
         )
-    return scc.select(F.col("id").alias("doc_id"), F.col("scc").alias("scc_id"))
+        return scc.unionByName(E, allowMissingColumns=True)
+
+    # state: node rows (id, scc; scc = -1 while active) and the residual
+    # edge rows (src, dst) among active nodes, told apart by null columns
+    state, _ = superstep(
+        nodes.select("id", F.lit(-1).cast("long").alias("scc")).unionByName(
+            edges, allowMissingColumns=True
+        ),
+        outer,
+        SCC_OUTER,
+    )
+    return state.filter(F.col("id").isNotNull()).select(
+        F.col("id").alias("doc_id"), F.col("scc").alias("scc_id")
+    )
 
 
 def _scc_sql() -> str:

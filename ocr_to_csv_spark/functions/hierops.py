@@ -16,8 +16,8 @@ Scale design (100 TB):
   composes with itself each round (f ∘ f, jump distances add), so a
   depth-D chain resolves in ⌈log₂ D⌉ keyed equi-joins — 12 rounds
   covers depth 4096, where naive per-hop iteration needs D rounds.
-  Each round is one node-sized hash join; ``localCheckpoint`` per
-  round truncates lineage (the connected_components/scc idiom).
+  Each round is one node-sized hash join and one ``util.superstep``
+  staging write.
 - ``subtree_sums`` builds the ancestor CLOSURE (node → each of its
   ≤ depth ancestors) by plain per-hop iteration — O(n·depth) rows is
   the OUTPUT size, so doubling cannot beat it — then one join with the
@@ -38,9 +38,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .util import table
+from .util import superstep, table
 
-DOUBLING_ROUNDS = 12  # resolves chains up to depth 4096
+DOUBLING_ROUNDS = 12  # fixpoint guard; resolves chains up to depth 4096
 
 
 def _nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -59,20 +59,24 @@ def q_redirect_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("node") >= 2, F.expr("node div 2"))
         .otherwise(F.col("node")).alias("dst"),
         F.when(F.col("node") >= 2, F.lit(1)).otherwise(F.lit(0)).alias("d"),
-    ).localCheckpoint()
-    for _ in range(DOUBLING_ROUNDS):
-        if f.filter(F.col("dst") >= 2).count() == 0:
-            break  # every pointer reached a root (roots are 0 and 1)
+    )
+
+    def double(f, _r):
         a, b = f.alias("a"), f.alias("b")
-        f = (
-            a.join(b, F.col("a.dst") == F.col("b.src"))
-            .select(
-                F.col("a.src").alias("src"),
-                F.col("b.dst").alias("dst"),
-                (F.col("a.d") + F.col("b.d")).alias("d"),
-            )
-            .localCheckpoint()
+        return a.join(b, F.col("a.dst") == F.col("b.src")).select(
+            F.col("a.src").alias("src"),
+            F.col("b.dst").alias("dst"),
+            (F.col("a.d") + F.col("b.d")).alias("d"),
         )
+
+    # done once every pointer reached a root (roots are 0 and 1)
+    f, _ = superstep(
+        f,
+        double,
+        DOUBLING_ROUNDS,
+        metrics={"open": F.sum((F.col("dst") >= 2).cast("long"))},
+        done=lambda h: not h[-1]["open"],
+    )
     return f.select(
         F.col("src").alias("node"), F.col("dst").alias("root"),
         F.col("d").alias("depth"),

@@ -41,9 +41,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .util import gold_tag, table
+from .util import gold_tag, superstep, table
 
 DP_EPS = 60  # DP tolerance (plane is 1000 wide, trajectories ~NPTS long)
+HULL_ROUNDS = 64  # fixpoint guard; QuickHull recursion depth
+DP_ROUNDS = 64  # fixpoint guard; Douglas–Peucker recursion depth
 
 
 def q_convex_hull(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -74,8 +76,9 @@ def q_convex_hull(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("hi.x").alias("ax"), F.col("hi.y").alias("ay"),
             F.col("lo.x").alias("bx"), F.col("lo.y").alias("by"),
         )
-    ).localCheckpoint()
-    while True:
+    )
+
+    def split(edges, _r):
         cross = (F.col("bx") - F.col("ax")) * (F.col("y") - F.col("ay")) - (
             F.col("by") - F.col("ay")
         ) * (F.col("x") - F.col("ax"))
@@ -86,19 +89,7 @@ def q_convex_hull(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         far = cand.groupBy("grp", "ax", "ay", "bx", "by").agg(
             F.max(F.struct("cross", "x", "y")).alias("m")
-        )
-        if far.isEmpty():
-            return (
-                edges.select("grp", F.col("ax").alias("x"), F.col("ay").alias("y"))
-                .distinct()
-                .select(
-                    "grp",
-                    F.col("x").cast("long").alias("x"),
-                    F.col("y").cast("long").alias("y"),
-                )
-                .orderBy("grp", "x", "y")
-            )
-        far = far.select(
+        ).select(
             "grp", "ax", "ay", "bx", "by",
             F.col("m.x").alias("mx"), F.col("m.y").alias("my"),
         )
@@ -107,8 +98,10 @@ def q_convex_hull(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["grp", "ax", "ay", "bx", "by"],
             "left_anti",
         )
-        split = far.select(
-            "grp", "ax", "ay", F.col("mx").alias("bx"), F.col("my").alias("by")
+        return keep.unionByName(
+            far.select(
+                "grp", "ax", "ay", F.col("mx").alias("bx"), F.col("my").alias("by")
+            )
         ).unionByName(
             far.select(
                 "grp",
@@ -116,7 +109,26 @@ def q_convex_hull(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "bx", "by",
             )
         )
-        edges = keep.unionByName(split).localCheckpoint()
+
+    # each split edge becomes two, so the edge count only grows and an
+    # unchanged count means no point was left of any edge
+    edges, _ = superstep(
+        edges,
+        split,
+        HULL_ROUNDS,
+        metrics={"n": F.count(F.lit(1))},
+        done=lambda h: len(h) > 1 and h[-1]["n"] == h[-2]["n"],
+    )
+    return (
+        edges.select("grp", F.col("ax").alias("x"), F.col("ay").alias("y"))
+        .distinct()
+        .select(
+            "grp",
+            F.col("x").cast("long").alias("x"),
+            F.col("y").cast("long").alias("y"),
+        )
+        .orderBy("grp", "x", "y")
+    )
 
 
 def _py_hull_points(sf_dir: str) -> dict[str, set[tuple[int, int]]]:
@@ -214,9 +226,10 @@ def q_dp_simplify(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _trajectories(spark, sf_dir).localCheckpoint()
     segs = pts.groupBy("user_id").agg(
         F.min("idx").alias("i0"), F.max("idx").alias("i1")
-    ).filter(F.col("i0") < F.col("i1")).localCheckpoint()
-    final = []
-    while True:
+    ).filter(F.col("i0") < F.col("i1"))
+
+    def split(state, _r):
+        segs = state.filter(F.col("open"))
         cand = (
             pts.join(segs, "user_id")
             .filter((F.col("idx") > F.col("i0")) & (F.col("idx") < F.col("i1")))
@@ -249,18 +262,22 @@ def q_dp_simplify(spark: SparkSession, sf_dir: str) -> DataFrame:
             split_at.select("user_id", "i0", "i1"),
             ["user_id", "i0", "i1"],
             "left_anti",
-        )
-        final.append(frozen)
-        if split_at.isEmpty():
-            break
-        segs = split_at.select(
+        ).withColumn("open", F.lit(False))
+        opened = split_at.select(
             "user_id", "i0", F.col("mid").alias("i1")
         ).unionByName(
             split_at.select("user_id", F.col("mid").alias("i0"), "i1")
-        ).localCheckpoint()
-    allsegs = final[0]
-    for f in final[1:]:
-        allsegs = allsegs.unionByName(f)
+        ).withColumn("open", F.lit(True))
+        return state.filter(~F.col("open")).unionByName(frozen).unionByName(opened)
+
+    # state: every segment, open until nothing splits it
+    allsegs, _ = superstep(
+        segs.withColumn("open", F.lit(True)),
+        split,
+        DP_ROUNDS,
+        metrics={"open": F.sum(F.col("open").cast("long"))},
+        done=lambda h: not h[-1]["open"],
+    )
     kept = allsegs.select("user_id", F.col("i0").alias("idx")).unionByName(
         allsegs.select("user_id", F.col("i1").alias("idx"))
     ).distinct()

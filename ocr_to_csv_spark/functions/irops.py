@@ -39,7 +39,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import curation6
-from .util import DUCK_TOKENS, table, tokens
+from .graphtext import _edges
+from .util import DUCK_TOKENS, superstep, table, tokens
 
 RRF_K = 60  # reciprocal-rank-fusion damping constant
 RRF_TOP = 10  # fused results kept per query token
@@ -179,11 +180,7 @@ _WINNOW_PAIRS_SQL = f"""
 def _und_edges(nodes: DataFrame, n: int) -> DataFrame:
     """Distinct undirected (no self-loop) view of the shared modular
     link graph (see graphtext._edges / textops.q_pagerank)."""
-    i = F.col("id")
-    e1 = nodes.filter(i % 3 != 0).select(i.alias("src"), ((i * 2 + 1) % n).alias("dst"))
-    e2 = nodes.filter(i % 2 == 0).select(i.alias("src"), ((i * 7 + 3) % n).alias("dst"))
-    e3 = nodes.filter(i % 6 == 1).select(i.alias("src"), ((i + n // 2) % n).alias("dst"))
-    e = e1.unionByName(e2).unionByName(e3)
+    e = _edges(nodes, n)
     return (
         e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .filter(F.col("src") != F.col("dst"))
@@ -200,18 +197,15 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents", spread=True)
     n = d.count()
     nodes = d.select(F.col("doc_id").cast("long").alias("id"))
-    e = _und_edges(nodes, n).localCheckpoint()
-    for _ in range(KCORE_ROUNDS):
+
+    def peel(e, _r):
         deg = e.groupBy("src").agg(F.count("*").alias("c"))
         keep = deg.filter(F.col("c") >= KCORE_K).select("src")
-        # localCheckpoint each round: e_{r+1} references e_r three times
-        # (directly + via both semi-join keep sides); without truncation
-        # the plan tree grows 3^rounds branches and the optimizer blows up.
-        e = (
-            e.join(keep, "src", "left_semi")
-            .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
-            .localCheckpoint()
+        return e.join(keep, "src", "left_semi").join(
+            keep.withColumnRenamed("src", "dst"), "dst", "left_semi"
         )
+
+    e, _ = superstep(_und_edges(nodes, n), peel, KCORE_ROUNDS)
     return (
         e.groupBy("src")
         .agg(F.count("*").alias("degree"))

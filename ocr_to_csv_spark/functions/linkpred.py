@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .graphtext import _edges
 from .util import global_seq, table
 
 RA_SCALE = 10_000
@@ -50,17 +51,7 @@ def _undirected_edges(spark: SparkSession, sf_dir: str):
     d = table(spark, sf_dir, "documents")
     n = d.count()
     nodes = d.select(F.col("doc_id").cast("long").alias("id"))
-    i = F.col("id")
-    e1 = nodes.filter(i % 3 != 0).select(
-        i.alias("src"), ((i * 2 + 1) % n).alias("dst")
-    )
-    e2 = nodes.filter(i % 2 == 0).select(
-        i.alias("src"), ((i * 7 + 3) % n).alias("dst")
-    )
-    e3 = nodes.filter(i % 6 == 1).select(
-        i.alias("src"), ((i + n // 2) % n).alias("dst")
-    )
-    e = e1.unionByName(e2).unionByName(e3).filter(F.col("src") != F.col("dst"))
+    e = _edges(nodes, n).filter(F.col("src") != F.col("dst"))
     return (
         e.select(
             F.least("src", "dst").alias("lo"),
@@ -87,6 +78,36 @@ _EDGES_SQL = """
         FROM raw WHERE src <> dst
     )
 """
+
+
+def _py_undirected_edges(sf_dir: str) -> set[tuple[int, int]]:
+    """Independent pure-Python rebuild of ``_undirected_edges``: the
+    (lo, hi) pairs of the modular link graph, self-loops dropped — the
+    input of the staged python goldens."""
+    import glob
+
+    import pandas as pd
+
+    files = sorted(glob.glob(f"{sf_dir}/documents.parquet")) or sorted(
+        glob.glob(f"{sf_dir}/documents.parquet/*.parquet")
+    )
+    ids = pd.concat(
+        [pd.read_parquet(f, columns=["doc_id"]) for f in files]
+    )["doc_id"].astype(int).tolist()
+    n = len(ids)
+    pairs: set[tuple[int, int]] = set()
+    for i in ids:
+        raw = []
+        if i % 3 != 0:
+            raw.append((i, (i * 2 + 1) % n))
+        if i % 2 == 0:
+            raw.append((i, (i * 7 + 3) % n))
+        if i % 6 == 1:
+            raw.append((i, (i + n // 2) % n))
+        for a, b in raw:
+            if a != b:
+                pairs.add((min(a, b), max(a, b)))
+    return pairs
 
 
 def q_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -33,7 +33,9 @@ from pyspark.sql import functions as F
 from .curation8 import ORACLES as C8_ORACLES
 from .geoops import _GEO_SQL, q_geo_grid_join
 from .textops import ORACLES as TX_ORACLES
-from .util import gold_tag
+from .util import gold_tag, superstep
+
+GS_ROUNDS = 64  # fixpoint guard; rounds ≤ max candidates per customer
 
 
 def q_stable_match_round(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -146,21 +148,20 @@ def q_stable_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent oracle.
 
     Scale shape: per round two keyed aggregations + one anti-join
-    against the rejected-pair set (bounded by |candidates|);
-    ``localCheckpoint`` truncates lineage; rounds ≤ max candidates per
-    customer (a constant of the radius, not of data size)."""
+    against the rejected-pair set (bounded by |candidates|); one
+    ``util.superstep`` round each; rounds ≤ max candidates per customer
+    (a constant of the radius, not of data size)."""
     cand = q_geo_grid_join(spark, sf_dir).localCheckpoint()
-    rejected = None  # (c_custkey, s_suppkey) pairs
-    tentative = None  # (s_suppkey, c_custkey, dist2)
-    for _ in range(64):
-        avail = cand
-        if rejected is not None:
-            avail = cand.join(
-                rejected, ["c_custkey", "s_suppkey"], "left_anti"
-            )
-        if tentative is not None:
-            held = tentative.select("c_custkey")
-            avail = avail.join(held, "c_custkey", "left_anti")
+
+    def propose(state, _r):
+        tentative = state.filter(~F.col("rej")).select(
+            "s_suppkey", "c_custkey", "dist2"
+        )
+        avail = cand.join(
+            state.filter(F.col("rej")).select("c_custkey", "s_suppkey"),
+            ["c_custkey", "s_suppkey"],
+            "left_anti",
+        ).join(tentative.select("c_custkey"), "c_custkey", "left_anti")
         props = avail.groupBy("c_custkey").agg(
             F.min_by(
                 "s_suppkey",
@@ -170,11 +171,7 @@ def q_stable_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(F.struct(F.col("dist2").alias("d"),
                            F.col("s_suppkey").alias("k"))).alias("pd"),
         ).select("c_custkey", "s_suppkey", F.col("pd.d").alias("dist2"))
-        if props.isEmpty():
-            break
-        pool = (
-            props.unionByName(tentative) if tentative is not None else props
-        )
+        pool = props.unionByName(tentative)
         new_tent = pool.groupBy("s_suppkey").agg(
             F.min_by(
                 "c_custkey",
@@ -184,17 +181,26 @@ def q_stable_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(F.struct(F.col("dist2").alias("d"),
                            F.col("c_custkey").alias("k"))).alias("ad"),
         ).select("s_suppkey", "c_custkey", F.col("ad.d").alias("dist2"))
-        losers = pool.join(
-            new_tent, ["s_suppkey", "c_custkey"], "left_anti"
-        ).select("c_custkey", "s_suppkey")
-        tentative = new_tent.localCheckpoint()
-        if losers.isEmpty():
-            break
-        rejected = (
-            losers if rejected is None
-            else rejected.unionByName(losers)
-        ).localCheckpoint()
-    return tentative.select("s_suppkey", "c_custkey", "dist2")
+        losers = pool.join(new_tent, ["s_suppkey", "c_custkey"], "left_anti")
+        return (
+            new_tent.withColumn("rej", F.lit(False))
+            .unionByName(state.filter(F.col("rej")))
+            .unionByName(losers.withColumn("rej", F.lit(True)))
+        )
+
+    # state: tentative pairs and rejected pairs (rej). Rejections only
+    # accumulate and every loser is a new one, so an unchanged rejected
+    # count means the last round rejected nothing: the fixpoint
+    state, _ = superstep(
+        cand.select(
+            "c_custkey", "s_suppkey", "dist2", F.lit(False).alias("rej")
+        ).filter(F.lit(False)),
+        propose,
+        GS_ROUNDS,
+        metrics={"rej": F.count(F.when(F.col("rej"), 1))},
+        done=lambda h: len(h) > 1 and h[-1]["rej"] == h[-2]["rej"],
+    )
+    return state.filter(~F.col("rej")).select("s_suppkey", "c_custkey", "dist2")
 
 
 def _py_points_and_candidates(sf_dir: str):

@@ -11,8 +11,8 @@ Scale design (100 TB):
   its undecided neighbors joins the MIS and its neighbors drop out.
   Per round: one edge⋈undecided semi-join, one keyed min-agg, one
   left join — the pagerank/boruvka superstep shape, O(log n) expected
-  rounds, ``localCheckpoint`` lineage discipline, nothing node-sized
-  on the driver. The parallel local-minimum iteration provably equals
+  rounds, one ``util.superstep`` round each, nothing node-sized on
+  the driver. The parallel local-minimum iteration provably equals
   the SEQUENTIAL greedy MIS in priority order (the lexicographically
   first MIS), so a trivially-auditable pure-Python greedy is the
   independent golden oracle (stable_matching pattern).
@@ -37,9 +37,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .linkpred import _undirected_edges
+from .linkpred import _py_undirected_edges, _undirected_edges
 from .statsops import TS_FROM, TS_TO
-from .util import gold_tag, table
+from .util import gold_tag, superstep, table
 
 _MIS_ROUNDS = 40  # fixpoint guard; expected O(log n) rounds
 
@@ -55,14 +55,10 @@ def q_luby_mis(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = ue.select(F.col("lo").alias("a"), F.col("hi").alias("b")).unionByName(
         ue.select(F.col("hi").alias("a"), F.col("lo").alias("b"))
     ).localCheckpoint()
-    nodes = (
-        edges.select(F.col("a").alias("id")).distinct().localCheckpoint()
-    )
-    undecided = nodes.select("id", _prio(F.col("id")).alias("prio"))
-    selected: DataFrame | None = None
-    for _ in range(_MIS_ROUNDS):
-        if undecided.isEmpty():
-            break
+    nodes = edges.select(F.col("a").alias("id")).distinct()
+
+    def select_round(state, _r):
+        undecided = state.filter(F.col("in_mis").isNull())
         ue_live = (
             edges.join(
                 undecided.select(F.col("id").alias("a")), "a"
@@ -74,36 +70,36 @@ def q_luby_mis(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         nbr_min = ue_live.groupBy("a").agg(F.min("pb").alias("nmin"))
-        marked = (
-            undecided.join(nbr_min, undecided.id == nbr_min.a, "left")
-            .select(
-                "id", "prio",
-                (
-                    F.col("nmin").isNull() | (F.col("prio") < F.col("nmin"))
-                ).alias("win"),
-            )
-        ).localCheckpoint()
-        new_sel = marked.filter("win").select("id")
-        selected = (
-            new_sel if selected is None else selected.unionByName(new_sel)
-        ).localCheckpoint()
-        dropped = (
-            edges.join(new_sel.select(F.col("id").alias("a")), "a")
-            .select(F.col("b").alias("id"))
-            .unionByName(new_sel)
+        marked = undecided.join(nbr_min, undecided.id == nbr_min.a, "left").select(
+            "id", "prio",
+            (F.col("nmin").isNull() | (F.col("prio") < F.col("nmin"))).alias("win"),
+        )
+        # neighbors of this round's winners drop out (in_mis = 0)
+        hit = (
+            edges.join(marked.filter("win").select(F.col("id").alias("a")), "a")
+            .select(F.col("b").alias("id"), F.lit(True).alias("hit"))
             .distinct()
         )
-        undecided = (
-            marked.select("id", "prio")
-            .join(dropped, "id", "left_anti")
-            .localCheckpoint()
+        decided = marked.join(hit, "id", "left").select(
+            "id", "prio",
+            F.when(F.col("win"), 1).when(F.col("hit"), 0).alias("in_mis"),
         )
-    assert selected is not None
-    return nodes.join(
-        selected.withColumn("in_mis", F.lit(1)), "id", "left"
-    ).select(
+        return state.filter(F.col("in_mis").isNotNull()).unionByName(decided)
+
+    # state: every node, in_mis NULL while undecided
+    state, _ = superstep(
+        nodes.select(
+            "id", _prio(F.col("id")).alias("prio"),
+            F.lit(None).cast("int").alias("in_mis"),
+        ),
+        select_round,
+        _MIS_ROUNDS,
+        metrics={"left": F.count(F.when(F.col("in_mis").isNull(), 1))},
+        done=lambda h: not h[-1]["left"],
+    )
+    return state.select(
         F.col("id").cast("long").alias("id"),
-        F.coalesce("in_mis", F.lit(0)).cast("int").alias("in_mis"),
+        F.col("in_mis").cast("int").alias("in_mis"),
     )
 
 
@@ -111,30 +107,10 @@ def _py_greedy_mis(sf_dir: str) -> list[tuple[int, int]]:
     """Sequential greedy MIS in priority order — provably equal to the
     parallel local-minimum iteration; fully independent recomputation
     from doc_ids."""
-    import glob
-
-    import pandas as pd
-
-    files = sorted(glob.glob(f"{sf_dir}/documents.parquet")) or sorted(
-        glob.glob(f"{sf_dir}/documents.parquet/*.parquet")
-    )
-    ids = pd.concat(
-        [pd.read_parquet(f, columns=["doc_id"]) for f in files]
-    )["doc_id"].astype(int).tolist()
-    n = len(ids)
     adj: dict[int, set] = {}
-    for i in ids:
-        raw = []
-        if i % 3 != 0:
-            raw.append((i, (i * 2 + 1) % n))
-        if i % 2 == 0:
-            raw.append((i, (i * 7 + 3) % n))
-        if i % 6 == 1:
-            raw.append((i, (i + n // 2) % n))
-        for a, b in raw:
-            if a != b:
-                adj.setdefault(a, set()).add(b)
-                adj.setdefault(b, set()).add(a)
+    for a, b in _py_undirected_edges(sf_dir):
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
     prio = {k: ((k * 2654435761) % 2147483648) * 4294967296 + k for k in adj}
     mis: set = set()
     blocked: set = set()

@@ -21,10 +21,12 @@ Scale design (100 TB):
       halves the distance-to-minimum each sweep, so the fixpoint
       arrives in O(log diameter) sweeps instead of O(diameter). The
       graph has at most one edge per live component (component-count-
-      sized, geometrically shrinking); change detection is ONE
-      1-row agg per sweep (``util.hash_min_fixpoint``). Loop state
-      severs through ``scratch.stage``, not ``localCheckpoint`` — see
-      its docstring for the measured checkpoint pathology this avoids.
+      sized, geometrically shrinking); each sweep is one
+      ``util.superstep`` staging write whose observed change count is
+      the convergence test (``util.hash_min_fixpoint``). The outer
+      rounds run on ``util.superstep`` too, which severs state through
+      ``scratch.stage``, not ``localCheckpoint`` — see its docstring
+      for the measured checkpoint pathology this avoids.
   The strict total order (w, lo, hi) makes edge weights effectively
   distinct, so the MSF is UNIQUE (standard exchange argument) and an
   independent pure-Python Kruskal with union-find is a bit-exact
@@ -51,11 +53,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .linkpred import _EDGES_SQL, _undirected_edges
+from .linkpred import _EDGES_SQL, _py_undirected_edges, _undirected_edges
 from .. import scratch
-from .util import gold_tag, hash_min_fixpoint
+from .util import gold_tag, hash_min_fixpoint, superstep
 
-MSF_ROUNDS = 24  # > log2(max component count) at any test sf
+MSF_ROUNDS = 24  # fixpoint guard; > log2(max component count) at any test sf
 _CONTRACT_SWEEPS = 40  # fixpoint guard; loop exits on no-change
 
 
@@ -120,14 +122,10 @@ def q_boruvka_msf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Unique under the strict (w, lo, hi) order; golden-oracled by an
     independent pure-Python Kruskal."""
     e = scratch.stage(_weighted_edges(spark, sf_dir))
-    comp = scratch.stage(
-        e.select(F.col("lo").alias("id"))
-        .unionByName(e.select(F.col("hi").alias("id")))
-        .distinct()
-        .select("id", F.col("id").alias("comp"))
-    )
-    msf: DataFrame | None = None
-    for _ in range(MSF_ROUNDS):
+
+    def boruvka_round(state, _r):
+        comp = state.filter(F.col("id").isNotNull()).select("id", "comp")
+        msf = state.filter(F.col("lo").isNotNull()).select("lo", "hi", "w")
         ec = (
             e.join(
                 comp.select(F.col("id").alias("lo"), F.col("comp").alias("clo")),
@@ -145,40 +143,46 @@ def q_boruvka_msf(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand = ec.select(F.col("clo").alias("c"), pick.alias("e")).unionByName(
             ec.select(F.col("chi").alias("c"), pick.alias("e"))
         )
+        # staged once: every contraction sweep reads it
         sel = scratch.stage(
             cand.groupBy("c")
             .agg(F.min("e").alias("m"))
             .select("m.*")
             .distinct()
         )
-        if sel.isEmpty():
-            break
-        picked = sel.select("lo", "hi", "w")
-        msf = scratch.stage(
-            picked
-            if msf is None
-            else msf.unionByName(picked).distinct()
-        )
         # Contract: hash-min to fixpoint on the component multigraph.
         ce = sel.select(F.col("clo").alias("a"), F.col("chi").alias("b"))
-        ce = scratch.stage(
-            ce.unionByName(
-                ce.select(F.col("b").alias("a"), F.col("a").alias("b"))
-            ).distinct()
-        )
-        lbl = scratch.stage(
+        ce = ce.unionByName(
+            ce.select(F.col("b").alias("a"), F.col("a").alias("b"))
+        ).distinct()
+        lbl = hash_min_fixpoint(
+            ce,
             comp.select(F.col("comp").alias("cid"))
             .distinct()
-            .select("cid", F.col("cid").alias("lbl"))
+            .select("cid", F.col("cid").alias("lbl")),
+            _CONTRACT_SWEEPS,
         )
-        lbl = hash_min_fixpoint(ce, lbl, _CONTRACT_SWEEPS)
-        comp = scratch.stage(
-            comp.join(lbl, comp.comp == lbl.cid)
-            .select("id", F.col("lbl").alias("comp"))
+        comp = comp.join(lbl, comp.comp == lbl.cid).select(
+            "id", F.col("lbl").alias("comp")
         )
+        msf = msf.unionByName(sel.select("lo", "hi", "w")).distinct()
+        return comp.unionByName(msf, allowMissingColumns=True)
 
-    assert msf is not None
-    return msf.select(
+    # state: component rows (id, comp) and forest rows (lo, hi, w), the
+    # other kind's columns null. The forest only grows, so an unchanged size means no component had an
+    # outgoing edge left: the fixpoint
+    state, _ = superstep(
+        e.select(F.col("lo").alias("id"))
+        .unionByName(e.select(F.col("hi").alias("id")))
+        .distinct()
+        .select("id", F.col("id").alias("comp"))
+        .unionByName(e.filter(F.lit(False)), allowMissingColumns=True),
+        boruvka_round,
+        MSF_ROUNDS,
+        metrics={"n": F.count("lo")},
+        done=lambda h: len(h) > 1 and h[-1]["n"] == h[-2]["n"],
+    )
+    return state.filter(F.col("lo").isNotNull()).select(
         F.col("lo").cast("long").alias("lo"),
         F.col("hi").cast("long").alias("hi"),
         F.col("w").cast("long").alias("w"),
@@ -189,29 +193,7 @@ def _py_weighted_edges(sf_dir: str) -> list[tuple[int, int, int]]:
     """Pure-Python recomputation of the weighted link graph from first
     principles (doc_ids → modular edges → weight hash) — fully
     independent of the Spark plan."""
-    import glob
-
-    import pandas as pd
-
-    files = sorted(glob.glob(f"{sf_dir}/documents.parquet")) or sorted(
-        glob.glob(f"{sf_dir}/documents.parquet/*.parquet")
-    )
-    ids = pd.concat(
-        [pd.read_parquet(f, columns=["doc_id"]) for f in files]
-    )["doc_id"].astype(int).tolist()
-    n = len(ids)
-    pairs = set()
-    for i in ids:
-        raw = []
-        if i % 3 != 0:
-            raw.append((i, (i * 2 + 1) % n))
-        if i % 2 == 0:
-            raw.append((i, (i * 7 + 3) % n))
-        if i % 6 == 1:
-            raw.append((i, (i + n // 2) % n))
-        for a, b in raw:
-            if a != b:
-                pairs.add((min(a, b), max(a, b)))
+    pairs = _py_undirected_edges(sf_dir)
     return sorted(
         (w, lo, hi)
         for lo, hi in pairs

@@ -19,7 +19,7 @@ Scale design (100 TB):
 - ``critical_path``: node weights are map-side (custkey % 7 + 1);
   forward cp (from roots) and backward cp (to sinks) are each the
   dag_levels max-propagation — per round ONE keyed equi-join + one
-  max-agg with ``localCheckpoint``, O(depth) rounds — and a node is
+  max-agg, one ``util.superstep`` round each, O(depth) rounds — and a node is
   critical iff down + up − w equals the global maximum. Output is one
   row (total path units, critical/total node counts); the oracle
   unrolls the same rounds as chained SQL layers, so both engines run
@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .dagops import MAX_ROUNDS, _edges
-from .util import table
+from .util import superstep, table
 
 LPT_K = 64  # heaviest tasks entering the schedule
 LPT_M = 8  # machines
@@ -156,44 +156,32 @@ def q_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("par").cast("long").alias("par"),
     ).localCheckpoint()
 
+    def longest(frm: str, to: str) -> DataFrame:
+        """cp(v) = w(v) + max cp over v's ``frm`` neighbours, MAX_ROUNDS
+        rounds from cp = w."""
+
+        def relax(cp, _r):
+            prop = (
+                edges.join(
+                    cp.select(F.col("node").alias(frm), F.col("cp").alias("ncp")),
+                    frm,
+                )
+                .groupBy(F.col(to).alias("node"))
+                .agg(F.max("ncp").alias("best"))
+            )
+            return nodes.join(prop, "node", "left").select(
+                "node", (F.col("w") + F.coalesce("best", F.lit(0))).alias("cp")
+            )
+
+        cp, _ = superstep(
+            nodes.select("node", F.col("w").alias("cp")), relax, MAX_ROUNDS
+        )
+        return cp
+
     # forward: down(v) = w(v) + max over parents down(par); roots start
-    down = nodes.select("node", F.col("w").alias("cp"))
-    for _ in range(MAX_ROUNDS):
-        prop = (
-            edges.join(
-                down.select(F.col("node").alias("par"), F.col("cp").alias("pcp")),
-                "par",
-            )
-            .groupBy(F.col("child").alias("node"))
-            .agg(F.max("pcp").alias("best_par"))
-        )
-        down = (
-            nodes.join(prop, "node", "left")
-            .select(
-                "node",
-                (F.col("w") + F.coalesce("best_par", F.lit(0))).alias("cp"),
-            )
-            .localCheckpoint()
-        )
+    down = longest("par", "child")
     # backward: up(v) = w(v) + max over children up(child)
-    up = nodes.select("node", F.col("w").alias("cp"))
-    for _ in range(MAX_ROUNDS):
-        prop = (
-            edges.join(
-                up.select(F.col("node").alias("child"), F.col("cp").alias("ccp")),
-                "child",
-            )
-            .groupBy(F.col("par").alias("node"))
-            .agg(F.max("ccp").alias("best_ch"))
-        )
-        up = (
-            nodes.join(prop, "node", "left")
-            .select(
-                "node",
-                (F.col("w") + F.coalesce("best_ch", F.lit(0))).alias("cp"),
-            )
-            .localCheckpoint()
-        )
+    up = longest("child", "par")
     j = (
         nodes.join(down.withColumnRenamed("cp", "down"), "node")
         .join(up.withColumnRenamed("cp", "up"), "node")

@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .util import DUCK_TOKENS, table, tokens
+from .util import DUCK_TOKENS, superstep, table, tokens
 
 H_CAP = 16  # tokens compared per suffix (4 doubling rounds)
 SA_TOP = 40  # suffix-array entries emitted by suffix_rank
@@ -79,15 +79,9 @@ def _rank_join(df: DataFrame, cols: list[str]) -> DataFrame:
 def _final_ranks(toks_df: DataFrame) -> DataFrame:
     """Prefix-doubling to H_CAP: (doc_id, off, rank) where rank orders
     suffixes by their first H_CAP tokens."""
-    state = _rank_join(_positions(toks_df), ["tok"]).select(
-        "doc_id", "off", "rank"
-    )
-    step = 1
-    while step < H_CAP:
-        # each round reads `state` twice (self-join on the shifted
-        # offset); checkpoint so lineage doesn't re-execute 2^rounds
-        # times — same discipline as dedup_clusters' fixpoint loop
-        state = state.localCheckpoint(eager=True)
+
+    def double(state, r):
+        step = 1 << (r - 1)
         nxt = state.select(
             "doc_id",
             (F.col("off") - step).alias("off"),
@@ -97,10 +91,16 @@ def _final_ranks(toks_df: DataFrame) -> DataFrame:
             state.join(nxt, ["doc_id", "off"], "left")
             .withColumn("nrank", F.coalesce(F.col("nrank"), F.lit(-1)))
         )
-        state = _rank_join(paired, ["rank", "nrank"]).select(
+        return _rank_join(paired, ["rank", "nrank"]).select(
             "doc_id", "off", "rank"
         )
-        step *= 2
+
+    # rounds compare 1, 2, 4, ... tokens ahead while that is < H_CAP
+    state, _ = superstep(
+        _rank_join(_positions(toks_df), ["tok"]).select("doc_id", "off", "rank"),
+        double,
+        (H_CAP - 1).bit_length(),
+    )
     return state
 
 

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .util import table
+from .util import superstep, table
 
 EPOCH_DAY = "1970-01-01"
 
@@ -441,18 +441,20 @@ def q_temporal_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("arrival", F.lit(0).cast("long"))
     )
-    for _ in range(REACH_ROUNDS):
+
+    def relax(arr, _r):
         upd = (
             edges.join(arr, edges.src == arr.user_id)
             .filter(F.col("ts_s") >= F.col("arrival"))
             .select(F.col("dst").alias("user_id"), F.col("ts_s").alias("arrival"))
         )
-        arr = (
+        return (
             arr.unionByName(upd)
             .groupBy("user_id")
             .agg(F.min("arrival").alias("arrival"))
         )
-        arr = arr.localCheckpoint()  # cut the exponential plan growth
+
+    arr, _ = superstep(arr, relax, REACH_ROUNDS)
     return arr.select(F.col("user_id").cast("long").alias("user_id"), "arrival")
 
 

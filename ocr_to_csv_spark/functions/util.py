@@ -42,18 +42,55 @@ def one_row(spark, sf_dir: str):
     return d.agg(F.count(F.lit(1)).cast("long").alias("n_regions"))
 
 
+def superstep(state, step, max_rounds: int, metrics=None, done=None):
+    """Drive an iterative query: the one place its state severs lineage
+    and its convergence is tested.
+
+    ``state`` is staged through ``scratch.stage`` as round 0, then
+    ``step(state, r)`` is staged for r = 1..``max_rounds``. ``metrics``
+    (name -> non-distinct aggregate Column) ride every staging write as
+    a Spark ``Observation``, so reading them runs no extra job;
+    ``history`` is the list of metric dicts of rounds 0..r. ``done``
+    (history -> bool) is tested after every round, round 0 included, so
+    an already-converged state runs no step. Without ``done`` the loop
+    runs exactly ``max_rounds`` rounds; with it, ``max_rounds`` is a
+    fixpoint guard and running out of rounds raises ``RuntimeError``.
+    Returns ``(state, history)``."""
+    from pyspark.sql import Observation
+
+    history: list[dict] = []
+
+    def sever(df):
+        obs = Observation()
+        cols = [c.alias(k) for k, c in (metrics or {}).items()]
+        out = scratch.stage(df.observe(obs, *cols) if cols else df)
+        history.append(obs.get if cols else {})
+        return out
+
+    state = sever(state)
+    for r in range(1, max_rounds + 1):
+        if done is not None and done(history):
+            return state, history
+        state = sever(step(state, r))
+    if done is not None and not done(history):
+        raise RuntimeError(f"superstep: no fixpoint in {max_rounds} rounds")
+    return state, history
+
+
 def hash_min_fixpoint(edges, labels, max_sweeps: int = 40):
     """Hash-min label propagation to fixpoint over a symmetric edge
     list — the contraction/connected-components inner loop. Per sweep:
     one keyed join + min-agg (the hash-min step), then ONE pointer jump
     (lbl := min(lbl, lbl[lbl])) so distance-to-minimum at least halves
-    — fixpoint in O(log diameter) sweeps instead of O(diameter). Change
-    detection is a single 1-row agg per sweep, and state severs through
-    ``scratch.stage`` every second sweep (see its docstring for the
-    localCheckpoint pathology this avoids). ``edges``: (a, b) both
-    directions; ``labels``: (cid, lbl), already staged/cheap to
-    recompute. Returns the fixpoint (cid, lbl)."""
-    for sweep in range(max_sweeps):
+    — fixpoint in O(log diameter) sweeps instead of O(diameter). Each
+    sweep is one ``superstep`` staging write whose observed change count
+    is the convergence test (round 0, the input, has nothing to compare
+    against, so at least one sweep runs). ``edges``: (a, b) both directions;
+    ``labels``: (cid, lbl). Returns the fixpoint (cid, lbl); raises
+    ``RuntimeError`` when ``max_sweeps`` sweeps do not reach it."""
+
+    def sweep(labels, _r):
+        labels = labels.select("cid", "lbl")
         nb = (
             edges.join(
                 labels.select(F.col("cid").alias("a"), F.col("lbl").alias("la")),
@@ -70,20 +107,20 @@ def hash_min_fixpoint(edges, labels, max_sweeps: int = 40):
         jump = stepped.select(
             F.col("cid").alias("jcid"), F.col("mid").alias("jlbl")
         )
-        new = stepped.join(jump, stepped.mid == jump.jcid, "left").select(
+        return stepped.join(jump, stepped.mid == jump.jcid, "left").select(
             "cid",
             "old",
             F.least("mid", F.coalesce("jlbl", F.col("mid"))).alias("lbl"),
         )
-        if sweep % 2 == 1:
-            new = scratch.stage(new)
-        n_changed = new.agg(
-            F.sum((F.col("lbl") != F.col("old")).cast("long"))
-        ).collect()[0][0]
-        labels = new.drop("old")
-        if not n_changed:
-            break
-    return labels
+
+    labels, _ = superstep(
+        labels.select("cid", "lbl", F.col("lbl").alias("old")),
+        sweep,
+        max_sweeps,
+        metrics={"changed": F.sum((F.col("lbl") != F.col("old")).cast("long"))},
+        done=lambda h: len(h) > 1 and not h[-1]["changed"],
+    )
+    return labels.drop("old")
 
 
 def global_seq(df, order_cols: list[str], out: str = "seq"):

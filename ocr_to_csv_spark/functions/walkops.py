@@ -20,7 +20,9 @@ Scale design (100 TB):
   out-adjacency arrays (degree ≤ 3 ⇒ array-indexing is map-side), the
   next hop picked by hex32(walk|step) % out-degree — reproducible
   "randomness" with zero RNG state (the weighted_sample discipline).
-  Dangling nodes end their walk. Output is L+1 depth-summary rows.
+  Dangling nodes end their walk. Each step is one ``util.superstep``
+  round over the positions of every depth so far, and the L+1
+  depth-summary rows are ONE grouped aggregate over that state.
 
 Reference parity: no graph layer in the reference; the approximate
 members of the triangle family (triangles, edge_support, k_truss,
@@ -34,7 +36,7 @@ from pyspark.sql import functions as F
 
 from .graphtext import _edges
 from .linkpred import _EDGES_SQL, _undirected_edges
-from .util import DUCK_HEX32, hex32, table
+from .util import DUCK_HEX32, hex32, superstep, table
 
 WS_P = 4  # keep a wedge iff md5 % WS_P == 0 (~25% sample)
 WALK_L = 4  # walk length
@@ -161,30 +163,42 @@ def q_hash_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     outn = edges.groupBy(F.col("src").alias("cur")).agg(
         F.sort_array(F.collect_list("dst")).alias("ns")
     ).localCheckpoint()
-    state = nodes.filter(F.col("id") % WALK_SEED_MOD == 0).select(
-        F.col("id").alias("walk"), F.col("id").alias("cur")
-    )
-    summaries = [(0, state.count(), state.select("cur").distinct().count())]
-    for step in range(1, WALK_L + 1):
+
+    def advance(state, step):
         h = hex32(
             F.concat_ws("|", F.lit("wk"), F.col("walk"), F.lit(str(step)))
         )
-        state = (
-            state.join(outn, "cur")
+        nxt = (
+            state.filter(F.col("step") == step - 1)
+            .join(outn, "cur")
             .select(
                 "walk",
                 F.get(F.col("ns"), (h % F.size("ns")).cast("int")).alias(
                     "cur"
                 ),
+                F.lit(step).cast("long").alias("step"),
             )
-            .localCheckpoint()
         )
-        summaries.append(
-            (step, state.count(), state.select("cur").distinct().count())
-        )
-    return spark.createDataFrame(
-        summaries, "step long, n_active long, n_distinct_nodes long"
-    ).orderBy("step")
+        return state.unionByName(nxt)
+
+    # state: every walk's position at every depth so far
+    state, _ = superstep(
+        nodes.filter(F.col("id") % WALK_SEED_MOD == 0).select(
+            F.col("id").alias("walk"),
+            F.col("id").alias("cur"),
+            F.lit(0).cast("long").alias("step"),
+        ),
+        advance,
+        WALK_L,
+    )
+    per = state.groupBy("step").agg(
+        F.count(F.lit(1)).alias("n_active"),
+        F.count_distinct("cur").alias("n_distinct_nodes"),
+    )
+    return (
+        spark.range(WALK_L + 1).withColumnRenamed("id", "step")
+        .join(per, "step", "left").na.fill(0).orderBy("step")
+    )
 
 
 def _walk_h(step: int) -> str:

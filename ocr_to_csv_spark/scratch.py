@@ -76,14 +76,16 @@ def path() -> str:
 def stage(df):
     """Write ``df`` to a fresh scratch dir as parquet and read it back:
     later consumers scan the files instead of re-running ``df``'s plan.
-    Iterative loop state severs here rather than through chained
+    Iterative query state severs here, once per round, through
+    ``functions.util.superstep`` rather than through chained
     ``localCheckpoint``, whose jobs grow super-linearly across
     generations in this Spark build (measured 1.6 s → 6.2 s → 63 s per
     call in boruvka_msf at sf0.1, the driver spinning in Catalyst stats
     estimation); a parquet round-trip costs the same every round."""
     d = path()
     df.write.mode("overwrite").parquet(d)
-    return df.sparkSession.read.parquet(d)
+    # the known schema spares the footer-reading job of schema inference
+    return df.sparkSession.read.schema(df.schema).parquet(d)
 
 
 @contextlib.contextmanager

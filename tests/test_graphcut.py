@@ -62,13 +62,10 @@ def test_k_truss_fixpoint_property(spark):
 
 
 def test_partition_quality_matches_python(spark):
-    from ocr_to_csv_spark.functions.graphcut import (
-        N_PARTS,
-        _py_edges,
-        q_partition_quality,
-    )
+    from ocr_to_csv_spark.functions.graphcut import N_PARTS, q_partition_quality
+    from ocr_to_csv_spark.functions.linkpred import _py_undirected_edges
 
-    edges = _py_edges(SF)
+    edges = _py_undirected_edges(SF)
     m = len(edges)
     cut = sum(1 for lo, hi in edges if lo % N_PARTS != hi % N_PARTS)
     deg_mass = {}

@@ -233,3 +233,128 @@ def test_ppjoin_pairs_has_no_single_partition_exchange(spark):
     assert new
     bad = [k for k, v in new.items() if "SinglePartition" in v]
     assert not bad, new[bad[0]]
+
+
+# module:function -> why a Window.orderBy without partitionBy (one
+# partition holds every row) is acceptable there. "bounded" entries
+# window a small aggregate; "data-proportional" entries are known
+# single-partition ranks kept until they move to util.global_seq.
+UNPARTITIONED_WINDOW_ALLOWED = {
+    "functions.boostops:q_pareto_layers":
+        "data-proportional: one row per ordering customer (skyline "
+        "running max needs one global spend order)",
+    "functions.causalops:q_psm_match":
+        "data-proportional: treated units + distinct control scores",
+    "functions.conformops:q_conformal_interval":
+        "bounded: distinct residuals of the calibration split",
+    "functions.curation7:q_token_budget":
+        "data-proportional: one row per document",
+    "functions.curation7:q_epoch_shuffle":
+        "data-proportional: one row per document per epoch",
+    "functions.erops:q_snm_pairs":
+        "data-proportional: one row per customer (sorted-neighbourhood key)",
+    "functions.evalops:q_gains_table":
+        "data-proportional ntile over customers; running sums over 10 deciles",
+    "functions.experimentops:q_changepoint":
+        "bounded: one row per day of the event window",
+    "functions.fitops:q_isotonic_fit":
+        "bounded: 16 price bins",
+    "functions.mlops:q_best_split":
+        "bounded: distinct order-price cents",
+    "functions.netops:q_crawl_budget":
+        "bounded: one row per host",
+    "functions.opsaudit:q_dict_compress_est":
+        "data-proportional: distinct vocabulary terms",
+    "functions.projops:q_auc_roc":
+        "bounded: distinct event-value cents",
+    "functions.rankstats2:_ranked":
+        "bounded: distinct order-price cents",
+    "functions.recops:q_rec_exposure_gini":
+        "bounded: one row per catalog item",
+    "functions.relational:q_skyline":
+        "bounded: survivors of the per-partition local skyline",
+    "functions.sampleops:q_neyman_alloc":
+        "bounded: one row per market segment",
+    "functions.schedops:q_lpt_makespan":
+        "data-proportional: one row per user before the top-K cut",
+    "functions.sketchest:q_priority_sample_est":
+        "data-proportional: one row per order",
+    "functions.statsops:q_spearman_ranks":
+        "data-proportional: one row per document",
+    "functions.statsops:q_weighted_median":
+        "data-proportional: one row per document",
+    "functions.statsops:q_theil_sen":
+        "bounded: day pairs of the calendar-sized daily aggregate",
+    "functions.statsops2:q_ks_test":
+        "bounded: distinct account-balance values of two segments",
+    "functions.statsops2:q_seasonal_decompose":
+        "bounded: one row per order day",
+    "functions.succinctops:q_rank_select":
+        "data-proportional: one row per order (bitvector positions)",
+    "functions.suffixops:_rank_join":
+        "data-proportional: distinct rank keys of token positions",
+    "functions.suffixops:q_suffix_rank":
+        "data-proportional: one row per token position",
+    "functions.suffixops:q_longest_repeat":
+        "data-proportional: one row per token position",
+    "functions.survival:q_kaplan_meier":
+        "bounded: distinct lifetimes in days",
+    "functions.tableops:q_compaction_plan":
+        "bounded: one row per manifest file (order month)",
+    "functions.temporal:q_cusum_drift":
+        "bounded: one row per event day",
+    "functions.voteops:_ranks":
+        "data-proportional: one row per document",
+}
+
+
+def _unpartitioned_windows() -> set[str]:
+    """``module:function`` of every ``Window.orderBy(...)`` whose chain
+    never calls ``partitionBy``, under the package and the entry file;
+    the function is the outermost one enclosing the call."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(entrymod.__file__).resolve().parent
+    pkg = root / "ocr_to_csv_spark"
+    sites = set()
+    for f in sorted(pkg.rglob("*.py")) + [root / "__spark_entry__.py"]:
+        tree = ast.parse(f.read_text())
+        parent = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+        for node in ast.walk(tree):
+            fn = node.func if isinstance(node, ast.Call) else None
+            if not (
+                isinstance(fn, ast.Attribute)
+                and fn.attr == "orderBy"
+                and isinstance(fn.value, ast.Name)
+                and fn.value.id == "Window"
+            ):
+                continue
+            p, partitioned = node, False
+            while isinstance(parent.get(p), (ast.Attribute, ast.Call)):
+                p = parent[p]
+                partitioned |= isinstance(p, ast.Attribute) and p.attr == "partitionBy"
+            if partitioned:
+                continue
+            owner, p = "<module>", node
+            while p in parent:
+                p = parent[p]
+                if isinstance(p, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    owner = p.name
+            mod = ".".join(f.relative_to(pkg if f.is_relative_to(pkg) else root)
+                           .with_suffix("").parts)
+            sites.add(f"{mod}:{owner}")
+    return sites
+
+
+def test_unpartitioned_windows_are_allowlisted():
+    """A Window.orderBy without partitionBy funnels every row through
+    one partition; each site needs a reason, and stale reasons fail."""
+    sites = _unpartitioned_windows()
+    new = sorted(sites - set(UNPARTITIONED_WINDOW_ALLOWED))
+    stale = sorted(set(UNPARTITIONED_WINDOW_ALLOWED) - sites)
+    assert not new, (
+        f"unpartitioned Window.orderBy in {new}: partition it, rank with "
+        "util.global_seq, or add a justified allowlist entry"
+    )
+    assert not stale, f"stale allowlist entries: {stale}"

@@ -4,6 +4,8 @@ set -e
 cd "$(dirname "$0")/.."
 echo "== pytest =="
 python -m pytest tests/ -x -q
+echo "== perfbench self-tests =="
+python -m pytest perfbench/tests -q
 echo "== Spark-vs-DuckDB oracle gate (full registry) =="
 CHECK_JSON_OUT="${CHECK_JSON_OUT:-CORRECTNESS_local.json}" python tools/check_queries.py /root/testdata/sf0.01
 echo "== headline bench =="
