@@ -34,7 +34,61 @@ __version__ = "0.1.0"
 # so an embedding application can still override; must run before numpy
 # first loads in this process (this package imports numpy lazily below).
 import os as _os
+import sys as _sys
 
 for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS",
            "NUMEXPR_NUM_THREADS"):
     _os.environ.setdefault(_v, "1")
+
+
+def _keep_zip_directories():
+    """Re-read a zip archive's directory only when the archive changed.
+
+    A PySpark Python worker runs ``importlib.invalidate_caches()`` at the
+    start of every task (``worker_util.setup_spark_files``). Before CPython
+    3.12 that makes each ``zipimporter`` re-read its archive's central
+    directory right away. A worker holds one importer per package dir
+    inside ``pyspark.zip`` (1,328 entries), so every task re-parsed the
+    same directory ~16 times: 0.2-0.4 s before the UDF ran, measured on
+    empty segment tasks. The wrapper below keys each archive's directory
+    on ``os.stat`` (inode, size, mtime_ns) and re-reads only when that
+    changes; otherwise the importer rebinds to the shared cached directory.
+    """
+    import zipimport
+
+    if _sys.version_info >= (3, 12):  # 3.12 made the invalidation lazy
+        return
+    original = zipimport.zipimporter.invalidate_caches
+    if getattr(original, "_keyed_on_stat", False):
+        return
+    cache = zipimport._zip_directory_cache
+
+    def stat_key(archive):
+        try:
+            st = _os.stat(archive)
+        except OSError:
+            return None
+        return st.st_ino, st.st_size, st.st_mtime_ns
+
+    # The worker that imports this package re-read every cached directory
+    # in this task's setup, just before unpickling the UDF, so the current
+    # stat is the stat those directories were read at.
+    read_at = {archive: stat_key(archive) for archive in cache}
+
+    def invalidate_caches(self):
+        key = stat_key(self.archive)
+        files = cache.get(self.archive)
+        if key is not None and files is not None and read_at.get(self.archive) == key:
+            self._files = files
+            return
+        original(self)
+        read_at[self.archive] = key
+
+    invalidate_caches._keyed_on_stat = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+# Only inside a PySpark Python worker: its task setup module is loaded
+# there and never on the driver or in datagen pool workers.
+if "pyspark.worker_util" in _sys.modules:
+    _keep_zip_directories()

@@ -60,6 +60,9 @@ DATE_REGEX = r"^\d{1,2}/\d{1,2}/(\d{4}|\d{2})$"
 # stages want several tasks per core regardless of the global shuffle
 # setting. Set SPARK_GRAFT_PY_STAGE_FACTOR to pin it (the scaling
 # protocol pins it so both parallelism levels run the identical plan).
+# The +20% was measured while every Python task also paid 0.2-0.4 s of
+# zip directory re-reads (skipped since: ``_keep_zip_directories`` in the
+# package init), a cost that grew with the task count; not re-measured.
 _PY_STAGE_TASKS_PER_CORE = 8
 
 

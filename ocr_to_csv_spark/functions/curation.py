@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .graphtext import _edges
 from .util import DUCK_HEX32, DUCK_TOKENS, hex32, table, tokens
 
 CDC_W = 4  # fingerprint window (tokens)
@@ -229,10 +230,7 @@ def q_bfs_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = d.count()
     nodes = d.select(F.col("doc_id").cast("long").alias("id"))
     i = F.col("id")
-    e1 = nodes.filter(i % 3 != 0).select(i.alias("src"), ((i * 2 + 1) % n).alias("dst"))
-    e2 = nodes.filter(i % 2 == 0).select(i.alias("src"), ((i * 7 + 3) % n).alias("dst"))
-    e3 = nodes.filter(i % 6 == 1).select(i.alias("src"), ((i + n // 2) % n).alias("dst"))
-    edges = e1.unionByName(e2).unionByName(e3)
+    edges = _edges(nodes, n)
     dist = nodes.select(
         "id",
         F.when(i % 7 == 0, F.lit(0)).otherwise(F.lit(BFS_INF)).cast("long").alias("dist"),
@@ -407,12 +405,7 @@ def _link_edges(spark: SparkSession, sf_dir: str):
     d = table(spark, sf_dir, "documents", spread=True)
     n = d.count()
     nodes = d.select(F.col("doc_id").cast("long").alias("id"))
-    i = F.col("id")
-    e1 = nodes.filter(i % 3 != 0).select(i.alias("src"), ((i * 2 + 1) % n).alias("dst"))
-    e2 = nodes.filter(i % 2 == 0).select(i.alias("src"), ((i * 7 + 3) % n).alias("dst"))
-    e3 = nodes.filter(i % 6 == 1).select(i.alias("src"), ((i + n // 2) % n).alias("dst"))
-    edges = e1.unionByName(e2).unionByName(e3)
-    return nodes, edges.withColumn(
+    return nodes, _edges(nodes, n).withColumn(
         "w", (F.col("src") + F.col("dst")) % 9 + 1
     )
 

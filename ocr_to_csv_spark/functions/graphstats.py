@@ -55,6 +55,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .graphtext import _edges
 from .linkpred import _EDGES_SQL, _undirected_edges
 from .util import table
 
@@ -340,17 +341,7 @@ def q_trustrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents", spread=True)
     n = d.count()
     nodes = d.select(F.col("doc_id").cast("long").alias("id"))
-    i = F.col("id")
-    e1 = nodes.filter(i % 3 != 0).select(
-        i.alias("src"), ((i * 2 + 1) % n).alias("dst")
-    )
-    e2 = nodes.filter(i % 2 == 0).select(
-        i.alias("src"), ((i * 7 + 3) % n).alias("dst")
-    )
-    e3 = nodes.filter(i % 6 == 1).select(
-        i.alias("src"), ((i + n // 2) % n).alias("dst")
-    )
-    edges = e1.unionByName(e2).unionByName(e3)
+    edges = _edges(nodes, n)
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     ed = edges.join(outdeg, "src")
     seed = (F.col("id") % TR_SEED_MOD == 0).cast("long")

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .graphtext import _edges
 from .util import (
     DUCK_HEX32,
     DUCK_HEX32B,
@@ -700,11 +701,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents", spread=True)
     n = d.count()
     nodes = d.select(F.col("doc_id").cast("long").alias("id"))
-    i = F.col("id")
-    e1 = nodes.filter(i % 3 != 0).select(i.alias("src"), ((i * 2 + 1) % n).alias("dst"))
-    e2 = nodes.filter(i % 2 == 0).select(i.alias("src"), ((i * 7 + 3) % n).alias("dst"))
-    e3 = nodes.filter(i % 6 == 1).select(i.alias("src"), ((i + n // 2) % n).alias("dst"))
-    edges = e1.unionByName(e2).unionByName(e3)
+    edges = _edges(nodes, n)
     outdeg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     ed = edges.join(outdeg, "src")  # static across supersteps
     base = PR_SCALE * 15 // 100
